@@ -64,11 +64,16 @@ def _with_ords(dictionary: DataFrame, num_partitions: Optional[int] = None) -> D
         )
     )
     w = Window.partitionBy("_pid").orderBy("term")
-    return (
+    # materialize the ranked frame (a local checkpoint, freed with the
+    # frame itself), then release the partitioned copy it was read from
+    ranked = (
         parted.join(off_df, "_pid")
         .withColumn("ord", F.row_number().over(w).cast("long") + F.col("_off") - 1)
         .drop("_pid", "_off")
+        .localCheckpoint()
     )
+    parted.unpersist()
+    return ranked
 
 
 def term_ords(index: InvertedIndex, num_partitions: Optional[int] = None) -> DataFrame:

@@ -8,13 +8,34 @@ The Spark re-expression of Lucene's read path
    (driver-side lookups on the tiny terms table —
    `search/TermQuery.java:61-67`), fix float32 idf/avgdl/weight and the
    256-entry norm-inverse cache (`BM25Similarity.java:179-184`);
-3. **execute**: decode+score matching posting blocks in one
-   Arrow-batched ``mapInPandas`` (numpy: FOR/PFor decode, cumsum, table
-   lookup, float32 BM25), combine clauses with DataFrame joins/aggs;
-4. **collect**: ``ORDER BY score DESC, doc_id ASC LIMIT k`` — Spark's
+3. **execute**: decode+score matching posting blocks with one
+   Arrow-batch kernel (``_decode_score``: FOR/PFor decode, cumsum,
+   table lookup, float32 BM25), combine clauses per doc;
+4. **collect**: top k by (score desc, doc_id asc) — Spark's
    ``TakeOrderedAndProject`` is the distributed analog of
    TopScoreDocCollector's tie-break-by-lower-docID heap
    (`search/HitQueue.java:76-82`).
+
+Two routes decide *where* step 3 runs, never *which* blocks it reads:
+
+- **local** — a term-shaped query (a boosted term, a flat term boolean
+  incl. rewritten prefixes, a WAND disjunction) on an index without
+  deletes whose Σ doc_freq is below ``_LOCAL_MAX_POSTINGS`` (1M; the
+  sum comes from the bound stats, so choosing costs no job). One
+  JVM-only job (``toArrow``, no Python workers) fetches the surviving
+  blocks; decode, score, combine and top-k run in numpy on the driver,
+  and the hits return as a local relation. Lucene scores such a query
+  in-process over a few hundred blocks; a ``mapInPandas`` job would
+  start Python tasks on every cached partition instead.
+- **distributed** — everything else (deletes, phrase, span, DisMax,
+  queries over the cap): the same kernel in ``mapInPandas``, clauses
+  combined with DataFrame aggregations.
+
+Block selection (exhaustive, the WAND ``keep`` filter, the conjunction
+prune's semi-join) happens before the route is taken, in a ``_Plan``
+both routes evaluate with the same float32 arithmetic and the same
+combine semantics, so the routes return identical top-k bit for bit
+(``tests/test_search_routes.py``).
 
 Two physical strategies, selected like ``BooleanScorerSupplier``
 (`search/BooleanScorerSupplier.java:197-548`):
@@ -27,7 +48,7 @@ Two physical strategies, selected like ``BooleanScorerSupplier``
   score); phase B prunes every block whose score upper bound plus the
   sum of the other terms' global maxima is below θ, then scores only
   survivors. Result-identical to exhaustive (see proof sketch in
-  ``_search_wand``), differential-tested in
+  ``_wand_plan``), differential-tested in
   ``tests/test_search_differential.py``.
 
 Boosts are pushed down into term weights (``weight = boost * idf`` in
@@ -43,12 +64,13 @@ from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucene_spark.functions.bm25 import BM25
-from lucene_spark.functions.forutil import for_decode, fordelta_decode, pfor_decode, delta_decode
+from lucene_spark.functions.forutil import fordelta_decode, pfor_decode
 from lucene_spark.index.builder import InvertedIndex
 from lucene_spark.search.query import (
     BooleanQuery,
@@ -80,42 +102,124 @@ _SCORED_SCHEMA = T.StructType(
 
 _DOCS_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
+_TOPK_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("score", T.FloatType(), False),
+    ]
+)
 
-def _decode_score_udf(weights: Dict[str, Tuple[float, np.ndarray]]):
-    """mapInPandas kernel: block rows → (doc_id, term, float32 score).
+
+_BLOCK_COLS = ("term", "docs_packed", "freqs_packed", "norms_raw")
+
+
+def _decode_score(terms, docs_packed, freqs_packed, norms_raw, weights):
+    """Decode + float32-score one batch of posting blocks.
+
+    The one scoring kernel of both routes. Per block only the FOR/PFor
+    unpacking runs; the BM25 arithmetic runs once over the batch with
+    per-posting weight and normInverse gathers, the same float32 ops
+    as ``w - w / (1 + freq * cache[norm])`` on each block alone.
 
     weights: term → (float32 weight, float32[256] normInverse cache).
-    All numpy; no per-posting Python.
+    Returns (doc_id int64, index into ``list(weights)`` per posting,
+    float32 score).
     """
+    names = list(weights)
+    if len(terms) == 0:
+        return (
+            np.empty(0, np.int64),
+            np.empty(0, np.intp),
+            np.empty(0, np.float32),
+        )
+    code_of = {t: i for i, t in enumerate(names)}
+    docs = [fordelta_decode(bytes(b)) for b in docs_packed]
+    lens = np.fromiter((d.size for d in docs), np.intp, len(docs))
+    term_of = np.repeat(
+        np.fromiter((code_of[t] for t in terms), np.intp, len(terms)), lens
+    )
+    freqs = np.concatenate(
+        [pfor_decode(bytes(b)) for b in freqs_packed]
+    ).astype(np.float32)
+    norms = np.frombuffer(b"".join(bytes(b) for b in norms_raw), dtype=np.uint8)
+    w = np.array([weights[t][0] for t in names], dtype=np.float32)[term_of]
+    ni = np.stack([weights[t][1] for t in names])[term_of, norms]
+    score = w - w / (np.float32(1.0) + freqs * ni)
+    return np.concatenate(docs), term_of, score
+
+
+def _decode_score_udf(weights: Dict[str, Tuple[float, np.ndarray]]):
+    """mapInPandas kernel: block rows → (doc_id, term, float32 score),
+    one output frame per Arrow batch (:func:`_decode_score`)."""
+    names = np.array(list(weights), dtype=object)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            outs = []
-            for term, docs_b, freqs_b, norms_b in zip(
-                pdf["term"].values,
-                pdf["docs_packed"].values,
-                pdf["freqs_packed"].values,
-                pdf["norms_raw"].values,
-            ):
-                w, cache = weights[term]
-                docs = fordelta_decode(bytes(docs_b))
-                freqs = pfor_decode(bytes(freqs_b)).astype(np.float32)
-                norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                ni = cache[norms]
-                score = w - w / (np.float32(1.0) + freqs * ni)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": docs,
-                            "term": term,
-                            "score": score.astype(np.float64),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if len(pdf) == 0:
+                continue
+            docs, term_of, score = _decode_score(
+                *(pdf[c].values for c in _BLOCK_COLS), weights
+            )
+            yield pd.DataFrame(
+                {
+                    "doc_id": docs,
+                    "term": names[term_of],
+                    "score": score.astype(np.float64),
+                }
+            )
 
     return fn
+
+
+def _sum_by_doc(docs: np.ndarray, score: np.ndarray):
+    """Per-doc float64 sum of posting scores → (doc_ids, sums, index of
+    each posting's doc in doc_ids)."""
+    uniq, inv = np.unique(docs, return_inverse=True)
+    total = np.bincount(inv, weights=score.astype(np.float64), minlength=uniq.size)
+    return uniq, total, inv
+
+
+def _combine(plan: "_Plan", docs: np.ndarray, term_of: np.ndarray, score: np.ndarray):
+    """Driver-side combine of a plan's scored postings → (doc_ids,
+    float64 scores): the numpy restatement of
+    :meth:`IndexSearcher._frame`'s aggregation, filter for filter."""
+    if plan.groups is None:
+        if len(plan.weights) == 1 and plan.theta is None:
+            return docs, score.astype(np.float64)  # one posting per doc
+        uniq, total, _ = _sum_by_doc(docs, score)
+        if plan.theta is None:
+            return uniq, total
+        keep = total >= plan.theta
+        return uniq[keep], total[keep]
+    names = list(plan.weights)
+    member = lambda ts: np.isin(term_of, [i for i, t in enumerate(names) if t in ts])
+    uniq, total, inv = _sum_by_doc(docs, np.where(member(plan.scoring), score, np.float32(0)))
+
+    def present(ts) -> np.ndarray:
+        out = np.zeros(uniq.size, dtype=bool)
+        out[inv[member(ts)]] = True
+        return out
+
+    keep = np.ones(uniq.size, dtype=bool)
+    n_should = np.zeros(uniq.size, dtype=np.int64)
+    for o, g in plan.groups:
+        if o == Occur.MUST_NOT:
+            keep &= ~present(g)
+        elif o in (Occur.MUST, Occur.FILTER):
+            keep &= present(g)
+        elif o == Occur.SHOULD:
+            n_should += present(g)
+    if plan.need > 0 and any(o == Occur.SHOULD for o, _ in plan.groups):
+        keep &= n_should >= plan.need
+    return uniq[keep], total[keep]
+
+
+def _block_keys(rows):
+    """Filter matching exactly the blocks of `rows` by (term, first_doc)."""
+    cond = F.lit(False)
+    for r in rows:
+        cond = cond | ((F.col("term") == r["term"]) & (F.col("first_doc") == r["first_doc"]))
+    return cond
 
 
 def _decode_docs_udf():
@@ -156,6 +260,27 @@ class _Ctx:
         )
 
 
+@dataclass
+class _Plan:
+    """A term-shaped query after block selection: the surviving blocks,
+    the weights their postings score with, and how scored postings
+    combine into doc scores. Both routes evaluate exactly this.
+
+    ``groups`` is None for a plain per-doc sum (a term, a WAND
+    disjunction); for a flat boolean it holds the [(occur, terms)]
+    presence groups, ``scoring`` the terms summed into the score, and
+    ``need`` the SHOULD groups a doc must match. ``theta`` keeps docs
+    whose sum is >= θ (WAND).
+    """
+
+    blocks: Optional[DataFrame]  # None: nothing can match
+    weights: Dict[str, Tuple[np.float32, np.ndarray]]
+    groups: Optional[List[Tuple[Occur, frozenset]]] = None
+    scoring: frozenset = frozenset()
+    need: int = 0
+    theta: Optional[float] = None
+
+
 class IndexSearcher:
     def __init__(self, index: InvertedIndex, k1: float = 1.2, b: float = 0.75):
         self.index = index
@@ -171,10 +296,11 @@ class IndexSearcher:
         # a reader holding impact metadata hot. Keyed by term; holds the
         # top _IMPACT_HEADS blocks (covers k ≤ 128·(_IMPACT_HEADS-1)).
         self._impact_cache: Dict[str, dict] = {}
-        # prune telemetry of the most recent _search_wand call
+        # prune telemetry of the most recent _wand_plan call
         # (postings/sec-style emitted metric; bench asserts pruned > 0
         # on clustered corpora)
         self.last_wand_stats: Optional[dict] = None
+        self._max_impact_col = None
 
     _IMPACT_HEADS = 4
     # lead-driven conjunction pruning guards: the lead group's decoded
@@ -183,6 +309,10 @@ class IndexSearcher:
     # (rest-of-query df ≫ lead df) before paying the lead pre-decode.
     _PRUNE_MAX_LEAD_DOCS = 1_000_000
     _PRUNE_MIN_RATIO = 4.0
+    # route cap: a term-shaped query whose Σ doc_freq is below this
+    # decodes its surviving blocks on the driver (at most tens of MB of
+    # decoded arrays); larger ones keep the distributed decode.
+    _LOCAL_MAX_POSTINGS = 1_000_000
 
     # ------------------------------------------------------------------
     def _live(self, df: DataFrame) -> DataFrame:
@@ -212,8 +342,11 @@ class IndexSearcher:
                 if self._wandable(q) and total_df > 100_000
                 else "exhaustive"
             )
-        if mode == "wand" and self._wandable(q):
-            result = self._search_wand(q, ctx, k)
+        plan = self._plan(q, ctx, k, mode)
+        if plan is not None and self._local_route(ctx):
+            return self._local_topk(plan, k)
+        if plan is not None:
+            result = self._frame(plan)
         elif mode == "maxscore" and self._wandable(q):
             result = self._search_maxscore(q, ctx, k)
         else:
@@ -224,6 +357,94 @@ class IndexSearcher:
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
         )
+
+    # -- routes -------------------------------------------------------------
+    def _plan(self, q: Query, ctx: _Ctx, k: int, mode: str) -> Optional[_Plan]:
+        """Block selection of a term-shaped query (a boosted term, a flat
+        term boolean, a WAND disjunction); None for every other shape,
+        which evaluates through :meth:`_eval` / MAXSCORE."""
+        if self._wandable(q):
+            if mode == "wand":
+                return self._wand_plan(q, ctx, k)
+            if mode == "maxscore":
+                return None
+        boost = 1.0
+        while isinstance(q, BoostQuery):
+            boost *= q.boost
+            q = q.query
+        if isinstance(q, TermQuery):
+            return self._terms_plan(ctx, {q.term: boost})
+        if isinstance(q, BooleanQuery):
+            flat = self._flat_term_clauses(q)
+            if flat is not None and any(
+                o in (Occur.SHOULD, Occur.MUST) for o, _ in flat
+            ):
+                return self._flat_plan(flat, q, ctx, boost)
+        return None
+
+    def _local_route(self, ctx: _Ctx) -> bool:
+        """Decode on the driver when nothing is tombstoned and the
+        query's Σ doc_freq (from the bound stats: no job) is under the
+        cap. Only *where* the surviving blocks decode depends on this."""
+        return (
+            self.index.hidden_docs is None
+            and sum(df for df, _ in ctx.term_stats.values())
+            < self._LOCAL_MAX_POSTINGS
+        )
+
+    def _local_topk(self, plan: _Plan, k: int) -> DataFrame:
+        """Local route: one JVM-only job fetches the surviving blocks as
+        Arrow; decode, score, combine and top-k run on the driver. The
+        hits come back as a local relation, so collecting them starts
+        no further job."""
+        docs = np.empty(0, np.int64)
+        total = np.empty(0, np.float64)
+        if plan.blocks is not None:
+            tbl = plan.blocks.select(*_BLOCK_COLS).toArrow()
+            docs, total = _combine(
+                plan,
+                *_decode_score(
+                    *(tbl.column(c).to_pylist() for c in _BLOCK_COLS), plan.weights
+                ),
+            )
+        score = total.astype(np.float32)
+        top = np.lexsort((docs, -score))[:k]
+        return self.index.spark.createDataFrame(
+            pa.table({"doc_id": docs[top], "score": score[top]}), _TOPK_SCHEMA
+        )
+
+    def _frame(self, plan: _Plan) -> DataFrame:
+        """Distributed route: the plan as a (doc_id, score double) frame."""
+        if plan.blocks is None:
+            return self.index.spark.createDataFrame([], "doc_id long, score double")
+        scored = self._decoded(plan)
+        if plan.groups is not None:
+            return self._flat_agg(scored, plan)
+        if len(plan.weights) == 1 and plan.theta is None:
+            return scored.select("doc_id", "score")  # one posting per doc
+        agg = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        if plan.theta is None:
+            return agg
+        return agg.filter(F.col("score") >= F.lit(plan.theta))
+
+    def _terms_plan(
+        self,
+        ctx: _Ctx,
+        term_boosts: Dict[str, float],
+        blocks: Optional[DataFrame] = None,
+    ) -> _Plan:
+        """Score every block of the given (indexed) terms, or `blocks`
+        when a prune already restricted them to those terms."""
+        weights = {}
+        for term, boost in term_boosts.items():
+            s = ctx.scorer(term, boost)
+            if s is not None:
+                weights[term] = (s.weight, s.cache)
+        if not weights:
+            return _Plan(None, {})
+        if blocks is None:
+            blocks = self._term_blocks(list(weights))
+        return _Plan(blocks, weights)
 
     def count(self, query: Query) -> int:
         """Number of live matching documents (`IndexSearcher.count`).
@@ -429,30 +650,18 @@ class IndexSearcher:
     def _term_blocks(self, terms: List[str]) -> DataFrame:
         return self.index.blocks.filter(F.col("term").isin(terms))
 
-    def _scored_terms(
-        self,
-        ctx: _Ctx,
-        term_boosts: Dict[str, float],
-        blocks: Optional[DataFrame] = None,
-    ) -> DataFrame:
-        """One decode+score pass over all blocks of the given terms.
-
-        `blocks` overrides the block set (conjunction pruning passes a
-        metadata-filtered frame); it must already be restricted to the
-        given terms.
-        """
-        weights = {}
-        for term, boost in term_boosts.items():
-            s = ctx.scorer(term, boost)
-            if s is not None:
-                weights[term] = (s.weight, s.cache)
-        if not weights:
+    def _scored_terms(self, ctx: _Ctx, term_boosts: Dict[str, float]) -> DataFrame:
+        """(doc_id, term, score) of every posting of the given terms, in
+        one decode+score pass."""
+        plan = self._terms_plan(ctx, term_boosts)
+        if plan.blocks is None:
             return self.index.spark.createDataFrame([], _SCORED_SCHEMA)
-        if blocks is None:
-            blocks = self._term_blocks(list(weights))
-        return blocks.select(
-            "term", "docs_packed", "freqs_packed", "norms_raw"
-        ).mapInPandas(_decode_score_udf(weights), _SCORED_SCHEMA)
+        return self._decoded(plan)
+
+    def _decoded(self, plan: _Plan) -> DataFrame:
+        return plan.blocks.select(*_BLOCK_COLS).mapInPandas(
+            _decode_score_udf(plan.weights), _SCORED_SCHEMA
+        )
 
     def _matching_docs(self, q: Query, ctx: _Ctx) -> DataFrame:
         """Unscored match set (FILTER / MUST_NOT / ConstantScore path)."""
@@ -580,7 +789,7 @@ class IndexSearcher:
             docs = self._matching_docs(q, ctx).distinct()
             return docs.select("doc_id", F.lit(float(np.float32(boost))).alias("score"))
         if isinstance(q, TermQuery):
-            return self._scored_terms(ctx, {q.term: boost}).select("doc_id", "score")
+            return self._frame(self._terms_plan(ctx, {q.term: boost}))
         if isinstance(q, PhraseQuery):
             from lucene_spark.search.positional import phrase_topk
 
@@ -669,18 +878,19 @@ class IndexSearcher:
         return out
 
     def _eval_boolean_flat(self, flat, q: BooleanQuery, ctx: _Ctx, boost: float) -> DataFrame:
+        return self._frame(self._flat_plan(flat, q, ctx, boost))
+
+    def _flat_plan(self, flat, q: BooleanQuery, ctx: _Ctx, boost: float) -> _Plan:
         """One decode pass for a flat term-only boolean: presence and
         scores per clause come from conditional aggregation instead of
         per-clause decode passes (BooleanScorer's single-pass window
         accumulator, `search/BooleanScorer.java:31-34`)."""
-        spark = self.index.spark
         # a MUST/FILTER group with no indexed member can never match
         for o, g in flat:
             if o in (Occur.MUST, Occur.FILTER) and not any(
                 t in ctx.term_stats for t in g
             ):
-                return spark.createDataFrame([], "doc_id long, score double")
-        nots = [t for o, g in flat if o == Occur.MUST_NOT for t in g]
+                return _Plan(None, {})
         scoring = {
             t: b * boost
             for o, g in flat
@@ -692,16 +902,28 @@ class IndexSearcher:
             for t in g:
                 all_terms.setdefault(t, 1.0)
         pruned = self._conjunction_pruned_blocks(ctx, flat, list(all_terms))
-        scored = self._scored_terms(ctx, all_terms, blocks=pruned)
+        plan = self._terms_plan(ctx, all_terms, blocks=pruned)
+        has_req = any(o in (Occur.MUST, Occur.FILTER) for o, _ in flat)
+        has_should = any(o == Occur.SHOULD for o, _ in flat)
+        msm = q.minimum_number_should_match
+        plan.groups = [(o, frozenset(g)) for o, g in flat]
+        plan.scoring = frozenset(scoring)
+        plan.need = msm if has_req else max(msm, 1 if has_should else 0)
+        return plan
 
+    @staticmethod
+    def _flat_agg(scored: DataFrame, plan: _Plan) -> DataFrame:
+        """Distributed combine of a flat-boolean plan: per-doc score sum
+        and per-group presence flags in one conditional aggregation."""
         in_ = lambda ts: F.col("term").isin(list(ts)) if ts else F.lit(False)
+        nots = [t for o, g in plan.groups if o == Occur.MUST_NOT for t in g]
         aggs = [
-            F.sum(F.when(in_(list(scoring)), F.col("score"))).alias("score"),
+            F.sum(F.when(in_(plan.scoring), F.col("score"))).alias("score"),
             F.max(F.when(in_(nots), F.lit(1))).alias("_n"),
         ]
         # per-group presence flags (a group matches when ANY member does)
         req_flags, should_flags = [], []
-        for i, (o, g) in enumerate(flat):
+        for i, (o, g) in enumerate(plan.groups):
             if o in (Occur.MUST, Occur.FILTER):
                 aggs.append(F.max(F.when(in_(g), F.lit(1))).alias(f"_r{i}"))
                 req_flags.append(f"_r{i}")
@@ -713,14 +935,12 @@ class IndexSearcher:
         cond = F.col("_n").isNull()
         for f_ in req_flags:
             cond = cond & (F.col(f_) == 1)
-        msm = q.minimum_number_should_match
-        need = msm if req_flags else max(msm, 1 if should_flags else 0)
-        if should_flags and need > 0:
+        if should_flags and plan.need > 0:
             n_should = sum(
                 [F.coalesce(F.col(f_), F.lit(0)) for f_ in should_flags[1:]],
                 F.coalesce(F.col(should_flags[0]), F.lit(0)),
             )
-            cond = cond & (n_should >= need)
+            cond = cond & (n_should >= plan.need)
         return agg.filter(cond).select(
             "doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score")
         )
@@ -853,31 +1073,22 @@ class IndexSearcher:
         term's highest-impact blocks.
 
         Their payloads are cached driver-side (a few KB per term), so
-        the common no-deletes path decodes them with the same float32
-        numpy kernel — zero Spark jobs. With tombstones, the head
-        blocks re-score through the Spark path so the anti-join keeps
-        θ valid for live docs.
+        the common no-deletes path scores them with the shared batch
+        kernel — zero Spark jobs. With tombstones, the head blocks
+        re-score through the Spark path so the anti-join keeps θ valid
+        for live docs.
         """
         per_term = min(max(1, math.ceil(k / 128) + 1), self._IMPACT_HEADS)
-        has_deletes = self.index.hidden_docs is not None
         head_rows = [r for t in scorers for r in heads[t]["heads"][:per_term]]
         if not head_rows:
             return 0.0
-        if has_deletes:
-            key_of = lambda r: (
-                (F.col("term") == r["term"])
-                & (F.col("segment_id") == r["segment_id"])
-                & (F.col("block_ord") == r["block_ord"])
-            )
-            key_filter = key_of(head_rows[0])
-            for r in head_rows[1:]:
-                key_filter = key_filter | key_of(r)
-            partial = [
-                (r["doc_id"], r["score"])
+        if self.index.hidden_docs is not None:
+            top = [
+                r["score"]
                 for r in self._live(
                     self._term_blocks(list(scorers))
-                    .filter(key_filter)
-                    .select("term", "docs_packed", "freqs_packed", "norms_raw")
+                    .filter(_block_keys(head_rows))
+                    .select(*_BLOCK_COLS)
                     .mapInPandas(_decode_score_udf(weights), _SCORED_SCHEMA)
                     .groupBy("doc_id")
                     .agg(F.sum("score").alias("score"))
@@ -887,20 +1098,11 @@ class IndexSearcher:
                 .collect()
             ]
         else:
-            acc: Dict[int, float] = {}
-            for row in head_rows:
-                w, cache_np = weights[row["term"]]
-                docs = fordelta_decode(bytes(row["docs_packed"]))
-                freqs = pfor_decode(bytes(row["freqs_packed"])).astype(np.float32)
-                norms = np.frombuffer(bytes(row["norms_raw"]), dtype=np.uint8)
-                # identical expression to _decode_score_udf (float32)
-                sc = (w - w / (np.float32(1.0) + freqs * cache_np[norms])).astype(
-                    np.float64
-                )
-                for d, v in zip(docs.tolist(), sc.tolist()):
-                    acc[d] = acc.get(d, 0.0) + v
-            partial = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        return float(partial[-1][1]) if len(partial) >= k else 0.0
+            docs, _, score = _decode_score(
+                *([r[c] for r in head_rows] for c in _BLOCK_COLS), weights
+            )
+            top = -np.sort(-_sum_by_doc(docs, score)[1])[:k]
+        return float(top[k - 1]) if len(top) >= k else 0.0
 
     def _disjunction_boosts(self, q: BooleanQuery) -> Dict[str, float]:
         """term → accumulated boost for a wandable pure disjunction."""
@@ -974,6 +1176,32 @@ class IndexSearcher:
             (F.col("score") + F.coalesce(F.col("s_non"), F.lit(0.0))).alias("score"),
         )
 
+    def _max_impact(self):
+        """Column x = max over a block's impacts of freq·normInverse.
+
+        The 256-float normInverse cache depends only on (avgdl, k1, b),
+        so the column is built once per searcher: its array literal
+        costs hundreds of Py4J calls, more than a small query's decode.
+        """
+        if self._max_impact_col is None:
+            cache = BM25(
+                doc_freq=1,
+                doc_count=self.index.doc_count or 1,
+                sum_total_term_freq=self.index.sum_total_term_freq or 1,
+                boost=1.0,
+                k1=self.k1,
+                b=self.b,
+            ).cache
+            cache_arr = F.array(*[F.lit(float(x)) for x in cache])
+            self._max_impact_col = F.array_max(
+                F.zip_with(
+                    "impact_freqs",
+                    "impact_norms",
+                    lambda fr, nm: fr.cast("double") * F.element_at(cache_arr, nm + 1),
+                )
+            )
+        return self._max_impact_col
+
     def _load_impact_heads(self, terms: List[str]) -> None:
         """Fill ``self._impact_cache`` for any term missing from it.
 
@@ -988,32 +1216,13 @@ class IndexSearcher:
         missing = [t for t in terms if t not in self._impact_cache]
         if not missing:
             return
-        # the normInverse cache depends only on (avgdl, k1, b)
-        cache_np = BM25(
-            doc_freq=1,
-            doc_count=self.index.doc_count or 1,
-            sum_total_term_freq=self.index.sum_total_term_freq or 1,
-            boost=1.0,
-            k1=self.k1,
-            b=self.b,
-        ).cache
-        cache_arr = F.array(*[F.lit(float(x)) for x in cache_np])
-        max_x = F.array_max(
-            F.zip_with(
-                "impact_freqs",
-                "impact_norms",
-                lambda fr, nm: fr.cast("double") * F.element_at(cache_arr, nm + 1),
-            )
-        )
         f_col = F.col("x") / (F.lit(1.0) + F.col("x"))
-        w_rank = Window.partitionBy("term").orderBy(
-            F.col("x").desc(), "segment_id", "block_ord"
-        )
+        w_rank = Window.partitionBy("term").orderBy(F.col("x").desc(), "first_doc")
         w_term = Window.partitionBy("term")
         meta_rows = (
             self._term_blocks(missing)
-            .withColumn("x", max_x)
-            .select("term", "segment_id", "block_ord", "x")
+            .withColumn("x", self._max_impact())
+            .select("term", "first_doc", "x")
             .withColumn("_r", F.row_number().over(w_rank))
             .withColumn("_mxf", F.max(f_col).over(w_term))
             .withColumn("_avf", F.avg(f_col).over(w_term))
@@ -1025,39 +1234,25 @@ class IndexSearcher:
         for r in meta_rows:
             by_term[r["term"]].append(r)
             stats[r["term"]] = (float(r["_mxf"]), float(r["_avf"]))
+        # a block is keyed by (term, first_doc): unique within a term,
+        # unlike (segment_id, block_ord), which repeats across the
+        # partial flushes of an aligned build's split segments
         payload_by_key: Dict[tuple, object] = {}
         if meta_rows:
-            key_of = lambda r: (
-                (F.col("term") == r["term"])
-                & (F.col("segment_id") == r["segment_id"])
-                & (F.col("block_ord") == r["block_ord"])
-            )
-            key_filter = key_of(meta_rows[0])
-            for r in meta_rows[1:]:
-                key_filter = key_filter | key_of(r)
             for row in (
                 self._term_blocks(missing)
-                .filter(key_filter)
-                .select(
-                    "term",
-                    "segment_id",
-                    "block_ord",
-                    "docs_packed",
-                    "freqs_packed",
-                    "norms_raw",
-                )
+                .filter(_block_keys(meta_rows))
+                .select("first_doc", *_BLOCK_COLS)
                 .collect()
             ):
-                payload_by_key[
-                    (row["term"], row["segment_id"], row["block_ord"])
-                ] = row
+                payload_by_key[(row["term"], row["first_doc"])] = row
         for t in missing:
             ordered = sorted(by_term[t], key=lambda r: r["_r"])
             self._impact_cache[t] = {
                 "heads": [
-                    payload_by_key[(t, r["segment_id"], r["block_ord"])]
+                    payload_by_key[(t, r["first_doc"])]
                     for r in ordered
-                    if (t, r["segment_id"], r["block_ord"]) in payload_by_key
+                    if (t, r["first_doc"]) in payload_by_key
                 ],
                 "mxf": stats.get(t, (0.0, 0.0))[0],
                 "avf": stats.get(t, (0.0, 0.0))[1],
@@ -1077,7 +1272,7 @@ class IndexSearcher:
                 return False
         return True
 
-    def _search_wand(self, q: BooleanQuery, ctx: _Ctx, k: int) -> DataFrame:
+    def _wand_plan(self, q: BooleanQuery, ctx: _Ctx, k: int) -> _Plan:
         """Block-max WAND: θ-bootstrap + upper-bound block pruning.
 
         Correctness: a block B of term t is pruned only when
@@ -1093,9 +1288,8 @@ class IndexSearcher:
         scorers = {t: ctx.scorer(t, b) for t, b in term_boosts.items()}
         scorers = {t: s for t, s in scorers.items() if s is not None}
         if not scorers:
-            return self.index.spark.createDataFrame([], "doc_id long, score double")
+            return _Plan(None, {})
         weights = {t: (s.weight, s.cache) for t, s in scorers.items()}
-
 
         # Per-term impact heads (cached across queries — see __init__):
         # top blocks by x = max(freq·normInverse), plus the f(x)=x/(1+x)
@@ -1104,7 +1298,7 @@ class IndexSearcher:
         self._load_impact_heads(list(scorers))
         heads = {t: self._impact_cache[t] for t in scorers}
         if all(not h["heads"] for h in heads.values()):
-            return self.index.spark.createDataFrame([], "doc_id long, score double")
+            return _Plan(None, {})
 
         # Cost-based degenerate-case routing (the physical-plan choice
         # BooleanScorerSupplier.java:197-305 makes from cost stats):
@@ -1124,11 +1318,7 @@ class IndexSearcher:
                 "theta": None, "prunable": False, "blocks": None,
                 "pruned": 0, "saturated": True,
             }
-            return (
-                self._scored_terms(ctx, dict(term_boosts))
-                .groupBy("doc_id")
-                .agg(F.sum("score").alias("score"))
-            )
+            return self._terms_plan(ctx, term_boosts)
 
         theta = self._bootstrap_theta(scorers, weights, heads, k)
 
@@ -1144,26 +1334,16 @@ class IndexSearcher:
         }
         total_ub = sum(max_ub.values())
 
-        # JVM-side per-block ub for the prune scan (whole-stage
-        # codegen; the 256-float normInverse cache is shared by every
-        # term so it becomes one array literal). The (1+ε) inflation
+        # JVM-side per-block ub for the prune scan. The (1+ε) inflation
         # guards against float32-vs-double rounding: a loose bound only
         # prunes less, never wrong.
-        cache = next(iter(scorers.values())).cache
-        cache_arr = F.array(*[F.lit(float(x)) for x in cache])
         w_map = F.create_map(
             *[F.lit(x) for t, s in scorers.items() for x in (t, float(s.weight))]
         )
         w_col = w_map[F.col("term")]
-        max_x = F.array_max(
-            F.zip_with(
-                "impact_freqs",
-                "impact_norms",
-                lambda fr, nm: fr.cast("double") * F.element_at(cache_arr, nm + 1),
-            )
-        )
+        max_x = self._max_impact()
         ub_col = (w_col - w_col / (F.lit(1.0) + max_x)) * F.lit(1.0 + 1e-5)
-        meta = self._term_blocks(list(scorers)).withColumn("ub", ub_col)
+        meta = self._term_blocks(list(scorers))
 
         # Driver-side prunability: a block of term t prunes only when
         # ub_block < θ - Σ_{t'≠t} mx(t'); if θ never exceeds the other
@@ -1181,7 +1361,7 @@ class IndexSearcher:
             others = F.create_map(
                 *[F.lit(x) for t, u in max_ub.items() for x in (t, total_ub - u)]
             )[F.col("term")]
-            keep = F.col("ub") + others >= F.lit(theta)
+            keep = ub_col + others >= F.lit(theta)
             # the keep predicate is a codegen'd expression over block
             # metadata — applying it costs one plan node while every
             # pruned block saves a Python-side decode, so it is applied
@@ -1201,10 +1381,4 @@ class IndexSearcher:
                     counts["kept"] or 0
                 )
             surv = meta.filter(keep)
-        return (
-            surv.select("term", "docs_packed", "freqs_packed", "norms_raw")
-            .mapInPandas(_decode_score_udf(weights), _SCORED_SCHEMA)
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-            .filter(F.col("score") >= F.lit(theta))
-        )
+        return _Plan(surv, weights, theta=float(theta))

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lucene_spark.functions.bm25 import BM25
+from lucene_spark.functions.forutil import fordelta_decode
 from lucene_spark.index import InvertedIndex, check_index
 from lucene_spark.search import BooleanClause, BooleanQuery, IndexSearcher, Occur, TermQuery
 
@@ -73,6 +75,35 @@ def test_aligned_has_split_segments_and_checks_clean(both):
     assert multi > 0
     report = check_index(a)
     assert all(v == 0 for v in report.values()), report
+
+
+def test_impact_heads_are_the_ranked_blocks(both, monkeypatch):
+    """Split segments repeat (segment_id, block_ord) within a term, so
+    the impact-head cache keys blocks by (term, first_doc): each cached
+    head is the block its window ranked, and every block appears once."""
+    _, a = both
+    rows = a.blocks.select(
+        "term", "segment_id", "block_ord", "first_doc", "impact_freqs", "impact_norms"
+    ).collect()
+    assert len({(r.term, r.segment_id, r.block_ord) for r in rows}) < len(rows)
+    s = IndexSearcher(a)
+    monkeypatch.setattr(s, "_IMPACT_HEADS", 64)  # every block is a head
+    s._load_impact_heads(WORDS)
+    cache = BM25(
+        doc_freq=1, doc_count=a.doc_count, sum_total_term_freq=a.sum_total_term_freq
+    ).cache
+    for t in WORDS:
+        x = {
+            r.first_doc: max(
+                float(f) * float(cache[n]) for f, n in zip(r.impact_freqs, r.impact_norms)
+            )
+            for r in rows
+            if r.term == t
+        }
+        heads = s._impact_cache[t]["heads"]
+        assert [h["first_doc"] for h in heads] == sorted(x, key=lambda d: (-x[d], d))
+        for h in heads:
+            assert fordelta_decode(bytes(h["docs_packed"]))[0] == h["first_doc"]
 
 
 def test_aligned_positional_phrase(spark):

@@ -50,6 +50,15 @@ def test_term_ords_dense_lexicographic(idx):
     assert len(rows) == 10
 
 
+def test_term_ords_releases_its_cache(spark, idx):
+    """term_ords leaves the session's cached relations as it found them."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    ords = term_ords(idx)
+    assert cache.numCachedEntries() == before
+    assert ords.count() == 10
+
+
 def test_seek_by_ord(idx):
     rows = seek_by_ord(idx, [0, 3, 9]).collect()
     got = {r["ord"]: (r["term"], r["doc_freq"]) for r in rows}
