@@ -37,8 +37,8 @@ from lucene_spark.search.parity import (
     search_after_f64,
     synonym_bm25_f64,
     _bm25_scored_ctes,
-    _decode_postings,
 )
+from lucene_spark.index.postings import read_postings
 from lucene_spark.search import (
     BooleanClause,
     BooleanQuery,
@@ -2166,7 +2166,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _INDEX_CACHE[("sorted", sf)] = (srt, idx)
         srt, idx = _INDEX_CACHE[("sorted", sf)]
         return (
-            _decode_postings(idx, ["hash"])
+            read_postings(idx, ["hash"])
             .select("doc_id")
             .distinct()
             .orderBy("doc_id")
@@ -2439,11 +2439,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # term vectors analog: per-doc (term, freq) decoded from postings
     def term_vectors(spark, sf):
         idx = _index(spark, sf)
-        # skip-pointer pruning: only blocks whose doc range can contain
-        # doc_id < 10 are decoded (first_doc metadata)
+        # skip-pointer pruning: only blocks whose doc range overlaps
+        # [0, 9] are decoded, and postings outside it are trimmed
         return (
-            _decode_postings(idx, None, max_doc=9)
-            .filter(F.col("doc_id") < 10)
+            read_postings(idx, None, doc_range=(0, 9))
             .select("doc_id", "term", "freq")
             .orderBy("doc_id", "term")
         )
@@ -4318,14 +4317,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def dv_update_score(spark, sf):
         from lucene_spark.index.dvupdates import DocValuesUpdates
         from lucene_spark.search.functionscore import function_score_topk
-        from lucene_spark.search.parity import _decode_postings
-
         idx = _index(spark, sf)
         base = _docs(spark, sf).select(
             "doc_id", ((F.col("doc_id") % 7) + 1).cast("double").alias("w")
         )
-        m1 = _decode_postings(idx, ["merge"]).select("doc_id").distinct()
-        m2 = _decode_postings(idx, ["vector"]).select("doc_id").distinct()
+        m1 = read_postings(idx, ["merge"]).select("doc_id").distinct()
+        m2 = read_postings(idx, ["vector"]).select("doc_id").distinct()
         dv = (
             DocValuesUpdates(base)
             .update_numeric(m1, "w", 10.0)

@@ -27,17 +27,7 @@ Layout of a packed blob:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
-
-# A/B switch for the doc-block layout (benchmark instrumentation only —
-# both sides of a session must agree, so it is read once at import and
-# inherited by executor Python workers). "v2" (default): 8-byte absolute
-# base header + FOR over the 127 gaps. "v1": the pre-round-4 layout, one
-# fused FOR block over [first, gaps...], whose width is dominated by
-# log2(first). Persisted manifests always use the default codec.
-DOC_CODEC = os.environ.get("LUCENE_SPARK_DOC_CODEC", "v2")
 
 __all__ = [
     "BLOCK_SIZE",
@@ -212,8 +202,6 @@ def fordelta_encode(doc_ids: np.ndarray) -> bytes:
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     if doc_ids.size == 0:
         return b""
-    if DOC_CODEC == "v1":
-        return for_encode(delta_encode(doc_ids).astype(np.uint64))
     base = np.array([doc_ids[0]], dtype="<u8").tobytes()
     gaps = np.diff(doc_ids).astype(np.uint64)
     return base + for_encode(gaps)
@@ -223,8 +211,6 @@ def fordelta_decode(blob: bytes) -> np.ndarray:
     """Inverse of :func:`fordelta_encode` → absolute sorted docIDs."""
     if len(blob) == 0:
         return np.empty(0, dtype=np.int64)
-    if DOC_CODEC == "v1":
-        return np.cumsum(for_decode(blob))
     base = int(np.frombuffer(blob, dtype="<u8", count=1)[0])
     gaps = for_decode(blob[8:])
     out = np.empty(gaps.size + 1, dtype=np.int64)

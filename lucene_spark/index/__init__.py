@@ -20,6 +20,7 @@ from lucene_spark.index.deletes import (
 )
 from lucene_spark.index.bp import bp_order_local, bp_reorder
 from lucene_spark.index.bpmerge import bp_reordering_merge
+from lucene_spark.index.postings import read_postings
 from lucene_spark.index.rearranger import rearrange
 from lucene_spark.index.backward import upgrade_index
 from lucene_spark.index.replicator import PrimaryNode, ReplicaNode
@@ -37,6 +38,7 @@ __all__ = [
     "bp_order_local",
     "bp_reorder",
     "bp_reordering_merge",
+    "read_postings",
     "rearrange",
     "upgrade_index",
     "check_index",

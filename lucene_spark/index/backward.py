@@ -63,19 +63,6 @@ def _v1_encode_docs(docs: np.ndarray) -> bytes:
     return for_encode(delta_encode(docs).astype(np.uint64))
 
 
-def _v2_encode_docs(docs: np.ndarray) -> bytes:
-    """v2 doc block: [base u8 LE][FOR(gaps)] — explicit, independent of
-    the forutil DOC_CODEC env switch (an upgrader must write the
-    current format no matter how the process is configured)."""
-    from lucene_spark.functions.forutil import for_encode
-
-    docs = np.asarray(docs, dtype=np.int64)
-    if docs.size == 0:
-        return b""
-    base = np.array([docs[0]], dtype="<u8").tobytes()
-    return base + for_encode(np.diff(docs).astype(np.uint64))
-
-
 def _zones(docs: np.ndarray) -> int:
     """Exact 64-zone occupancy bitmap — the builder's shared definition."""
     from lucene_spark.index.builder import zone_bitmap
@@ -108,13 +95,14 @@ def upgrade_index(
     had_zones = "doc_zones" in blocks.columns
     in_cols = blocks.columns
     out_cols = in_cols if had_zones else in_cols + ["doc_zones"]
+    from lucene_spark.functions.forutil import fordelta_encode
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             new_docs, new_zones = [], []
             for blob in pdf["docs_packed"].values:
                 docs = _v1_decode_docs(bytes(blob))
-                new_docs.append(_v2_encode_docs(docs))
+                new_docs.append(fordelta_encode(docs))
                 new_zones.append(_zones(docs) if docs.size else -1)
             pdf = pdf.copy()
             pdf["docs_packed"] = new_docs

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lucene_spark.index.builder import InvertedIndex, _encode_term_group
 from lucene_spark.index.merge import merge_segments, segment_infos
+from lucene_spark.index.postings import decode_group
 
 __all__ = ["bp_reordering_merge"]
 
@@ -78,51 +79,12 @@ def _remap_kernel(id_map: Dict[int, int]):
     """applyInPandas kernel factory: all blocks of one (segment, term)
     → decoded, doc-id-remapped, re-encoded blocks.  ``id_map`` is the
     per-merge doc map (Sorter.DocMap analog, merge-sized)."""
-    from lucene_spark.functions.forutil import (
-        for_decode_stream,
-        fordelta_decode,
-        pfor_decode,
-    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        with_pos = "positions_packed" in pdf.columns
-        with_pay = "payloads_packed" in pdf.columns
-        order = np.argsort(pdf["first_doc"].values, kind="stable")
-        docs_parts, freq_parts, norm_parts = [], [], []
-        pos_parts, pay_parts = [], []
-        for i in order:
-            docs_parts.append(fordelta_decode(bytes(pdf["docs_packed"].values[i])))
-            freqs = pfor_decode(bytes(pdf["freqs_packed"].values[i]))
-            freq_parts.append(freqs)
-            norm_parts.append(
-                np.frombuffer(bytes(pdf["norms_raw"].values[i]), dtype=np.uint8).astype(
-                    np.int64
-                )
-            )
-            if with_pos:
-                stream = for_decode_stream(bytes(pdf["positions_packed"].values[i]))
-                bounds = np.cumsum(freqs)[:-1]
-                pos_parts.extend(np.cumsum(c) for c in np.split(stream, bounds))
-                if with_pay:
-                    pay = np.frombuffer(
-                        bytes(pdf["payloads_packed"].values[i]), dtype=np.float32
-                    )
-                    pay_parts.extend(np.split(pay, bounds))
-        docs = np.concatenate(docs_parts)
-        remapped = np.array([id_map.get(int(d), int(d)) for d in docs], dtype=np.int64)
-        flat = pd.DataFrame(
-            {
-                "segment_id": int(pdf["segment_id"].iloc[0]),
-                "term": pdf["term"].iloc[0],
-                "doc_id": remapped,
-                "freq": np.concatenate(freq_parts),
-                "norm": np.concatenate(norm_parts),
-            }
+        flat = decode_group(pdf, int(pdf["segment_id"].iloc[0]))
+        flat["doc_id"] = np.array(
+            [id_map.get(int(d), int(d)) for d in flat["doc_id"].values], dtype=np.int64
         )
-        if with_pos:
-            flat["positions"] = pos_parts
-        if with_pay:
-            flat["payloads"] = pay_parts
         return _encode_term_group(flat)
 
     return kernel

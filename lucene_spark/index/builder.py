@@ -55,7 +55,6 @@ from lucene_spark.functions.forutil import (
     BLOCK_SIZE,
     delta_encode,
     for_encode_stream,
-    fordelta_decode,
     fordelta_encode,
     pfor_encode,
 )
@@ -461,48 +460,6 @@ def _pareto_impacts(freqs: np.ndarray, norms: np.ndarray) -> list:
     return out
 
 
-_NORMS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("dl", T.LongType(), False),
-        T.StructField("norm", T.IntegerType(), False),
-    ]
-)
-
-
-def _decode_norms(full_blocks: DataFrame) -> DataFrame:
-    """Decode the pseudo-term norm rows → (doc_id, dl, norm) table."""
-    from lucene_spark.functions.forutil import fordelta_decode, pfor_decode
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for docs_b, freqs_b, norms_b in zip(
-                pdf["docs_packed"].values,
-                pdf["freqs_packed"].values,
-                pdf["norms_raw"].values,
-            ):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": fordelta_decode(bytes(docs_b)),
-                            "dl": pfor_decode(bytes(freqs_b)),
-                            "norm": np.frombuffer(
-                                bytes(norms_b), dtype=np.uint8
-                            ).astype(np.int32),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return (
-        full_blocks.filter(F.col("term") == NORMS_TERM)
-        .select("docs_packed", "freqs_packed", "norms_raw")
-        .mapInPandas(fn, _NORMS_SCHEMA)
-    )
-
-
 @dataclass
 class InvertedIndex:
     """An index = blocks + terms + norms DataFrames + collection stats.
@@ -709,7 +666,12 @@ class InvertedIndex:
             F.sum("num_docs").cast("long").alias("doc_freq"),
             F.sum("sum_freq").cast("long").alias("total_term_freq"),
         )
-        norms = _decode_norms(full)
+        # norms table (doc_id, dl, norm) from the pseudo-term rows
+        from lucene_spark.index.postings import decode_frame
+
+        norms = decode_frame(
+            full.filter(F.col("term") == NORMS_TERM), ["doc_id", "freq", "norm"]
+        ).select("doc_id", F.col("freq").cast("long").alias("dl"), "norm")
 
         # materialize + size metrics in one action
         size_row = blocks.agg(

@@ -32,26 +32,18 @@ deleteDocuments/updateDocument, `index/PendingDeletes.java`,
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
 
-from lucene_spark.functions.forutil import (
-    for_decode_stream,
-    fordelta_decode,
-    pfor_decode,
-)
 from lucene_spark.index.builder import (
     BLOCKS_SCHEMA,
     BLOCKS_SCHEMA_PAY,
     BLOCKS_SCHEMA_POS,
-    NORMS_TERM,
     InvertedIndex,
     _encode_term_group,
 )
+from lucene_spark.index.postings import decode_frame
 
 __all__ = [
     "delete_by_ids",
@@ -159,13 +151,7 @@ def delete_documents(index: InvertedIndex, term: str) -> InvertedIndex:
     """`IndexWriter.deleteDocuments(new Term(field, term))`: tombstone
     every doc whose postings contain `term` (one decode of that term's
     blocks — postings untouched, stats unchanged)."""
-    from lucene_spark.search.searcher import _decode_docs_udf
-
-    ids = (
-        index.blocks.filter(F.col("term") == term)
-        .select("docs_packed")
-        .mapInPandas(_decode_docs_udf(), T.StructType([T.StructField("doc_id", T.LongType(), False)]))
-    )
+    ids = decode_frame(index.blocks.filter(F.col("term") == term), ["doc_id"])
     return _with_deletes(index, ids)
 
 
@@ -203,74 +189,6 @@ def update_document(
 
 
 # --- reclaim ----------------------------------------------------------------
-
-_POSTING_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("segment_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("freq", T.LongType(), False),
-        T.StructField("norm", T.LongType(), False),
-    ]
-)
-_POSTING_ROWS_SCHEMA_POS = T.StructType(
-    _POSTING_ROWS_SCHEMA.fields
-    + [T.StructField("positions", T.ArrayType(T.LongType()), False)]
-)
-_POSTING_ROWS_SCHEMA_PAY = T.StructType(
-    _POSTING_ROWS_SCHEMA_POS.fields
-    + [T.StructField("payloads", T.ArrayType(T.FloatType()), False)]
-)
-
-
-def _explode_blocks_udf(with_pos: bool, with_pay: bool = False):
-    """mapInPandas kernel: block rows → per-posting rows (the merge
-    decoder, factored so reclaim can anti-join deleted postings)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for i in range(len(pdf)):
-                docs = fordelta_decode(bytes(pdf["docs_packed"].values[i]))
-                freqs = pfor_decode(bytes(pdf["freqs_packed"].values[i]))
-                norms = np.frombuffer(
-                    bytes(pdf["norms_raw"].values[i]), dtype=np.uint8
-                ).astype(np.int64)
-                out = pd.DataFrame(
-                    {
-                        "segment_id": int(pdf["segment_id"].values[i]),
-                        "term": pdf["term"].values[i],
-                        "doc_id": docs,
-                        "freq": freqs,
-                        "norm": norms,
-                    }
-                )
-                if with_pos:
-                    term = pdf["term"].values[i]
-                    if term == NORMS_TERM:
-                        out["positions"] = [[] for _ in range(len(docs))]
-                        if with_pay:
-                            out["payloads"] = [[] for _ in range(len(docs))]
-                    else:
-                        stream = for_decode_stream(
-                            bytes(pdf["positions_packed"].values[i])
-                        )
-                        bounds = np.cumsum(freqs)[:-1]
-                        out["positions"] = [
-                            np.cumsum(chunk) for chunk in np.split(stream, bounds)
-                        ]
-                        if with_pay:
-                            pay = np.frombuffer(
-                                bytes(pdf["payloads_packed"].values[i]),
-                                dtype=np.float32,
-                            )
-                            out["payloads"] = list(np.split(pay, bounds))
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return fn
-
 
 def reclaimable_segments(
     index: InvertedIndex, min_delete_ratio: float = 0.1
@@ -334,21 +252,16 @@ def apply_deletes(
 
     with_pos = index.has_positions
     with_pay = index.has_payloads
-    if with_pay:
-        schema, rows_schema = BLOCKS_SCHEMA_PAY, _POSTING_ROWS_SCHEMA_PAY
-    elif with_pos:
-        schema, rows_schema = BLOCKS_SCHEMA_POS, _POSTING_ROWS_SCHEMA_POS
-    else:
-        schema, rows_schema = BLOCKS_SCHEMA, _POSTING_ROWS_SCHEMA
-    cols = (
-        ["segment_id", "term", "docs_packed", "freqs_packed", "norms_raw"]
-        + (["positions_packed"] if with_pos else [])
-        + (["payloads_packed"] if with_pay else [])
+    schema = (
+        BLOCKS_SCHEMA_PAY if with_pay else BLOCKS_SCHEMA_POS if with_pos else BLOCKS_SCHEMA
     )
-    live_rows = (
-        touched.select(*cols)
-        .mapInPandas(_explode_blocks_udf(with_pos, with_pay), rows_schema)
-        .join(dels.select("doc_id"), "doc_id", "left_anti")
+    cols = (
+        ["segment_id", "term", "doc_id", "freq", "norm"]
+        + (["positions"] if with_pos else [])
+        + (["payloads"] if with_pay else [])
+    )
+    live_rows = decode_frame(touched, cols).join(
+        dels.select("doc_id"), "doc_id", "left_anti"
     )
     re_encoded = live_rows.groupBy("segment_id", "term").applyInPandas(
         _encode_term_group, schema

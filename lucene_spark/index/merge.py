@@ -35,12 +35,11 @@ import time
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from lucene_spark.functions.forutil import fordelta_decode, pfor_decode
 from lucene_spark.index.builder import BLOCKS_SCHEMA, InvertedIndex, _encode_term_group
+from lucene_spark.index.postings import decode_group
 
 __all__ = [
     "SegmentInfo",
@@ -175,44 +174,7 @@ def merge_on_flush_plan(
 def _merge_term_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """applyInPandas kernel: all blocks of one (target_seg, term) across
     source segments → re-chunked, re-encoded blocks."""
-    from lucene_spark.functions.forutil import for_decode_stream
-
-    with_pos = "positions_packed" in pdf.columns
-    with_pay = "payloads_packed" in pdf.columns
-    order = np.argsort(pdf["first_doc"].values, kind="stable")
-    docs_parts, freq_parts, norm_parts, pos_parts, pay_parts = [], [], [], [], []
-    for i in order:
-        docs_parts.append(fordelta_decode(bytes(pdf["docs_packed"].values[i])))
-        freqs = pfor_decode(bytes(pdf["freqs_packed"].values[i]))
-        freq_parts.append(freqs)
-        norm_parts.append(
-            np.frombuffer(bytes(pdf["norms_raw"].values[i]), dtype=np.uint8).astype(np.int64)
-        )
-        if with_pos:
-            stream = for_decode_stream(bytes(pdf["positions_packed"].values[i]))
-            bounds = np.cumsum(freqs)[:-1]
-            pos_parts.extend(
-                np.cumsum(chunk) for chunk in np.split(stream, bounds)
-            )
-            if with_pay:
-                pay = np.frombuffer(
-                    bytes(pdf["payloads_packed"].values[i]), dtype=np.float32
-                )
-                pay_parts.extend(np.split(pay, bounds))
-    flat = pd.DataFrame(
-        {
-            "segment_id": int(pdf["target_seg"].iloc[0]),
-            "term": pdf["term"].iloc[0],
-            "doc_id": np.concatenate(docs_parts),
-            "freq": np.concatenate(freq_parts),
-            "norm": np.concatenate(norm_parts),
-        }
-    )
-    if with_pos:
-        flat["positions"] = pos_parts
-    if with_pay:
-        flat["payloads"] = pay_parts
-    return _encode_term_group(flat)
+    return _encode_term_group(decode_group(pdf, int(pdf["target_seg"].iloc[0])))
 
 
 def merge_segments(

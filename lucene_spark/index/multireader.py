@@ -15,19 +15,18 @@ No data is rewritten unless ids collide: with ``doc_bases`` all zero
 (already-disjoint global ids — the common case for range-assigned
 docIDs) the composite is PURE METADATA — blocks/terms/norms union
 lazily and collection stats add.  With non-zero bases the doc blocks
-re-encode in one embarrassingly-parallel mapInPandas pass per
-sub-index (same kernel family as the backward-codecs upgrader): the
-delta codec stores one absolute base per block header, so a docBase
-shift touches 8 bytes per block plus the zone bitmap — which is
-shift-INVARIANT (zones are relative to first_doc) and passes through
-untouched.  Segment ids offset likewise so CheckIndex invariants hold.
+are rewritten in one embarrassingly-parallel mapInPandas pass per
+sub-index, without a decode: the delta codec stores one absolute base
+per block header, so a docBase shift touches those 8 bytes per block
+and the first/max_doc metadata.  The zone bitmap is shift-INVARIANT
+(zones are relative to first_doc) and passes through untouched.
+Segment ids offset likewise so CheckIndex invariants hold.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, List, Optional, Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -36,25 +35,26 @@ from .builder import InvertedIndex
 __all__ = ["multi_reader", "ParallelReader"]
 
 
+def _shift_doc_blob(blob: bytes, base: int) -> bytes:
+    """A doc block shifted by ``base`` docIDs: only the 8-byte
+    little-endian block base changes; the FOR-packed gaps do not."""
+    if not blob:
+        return blob
+    first = int.from_bytes(blob[:8], "little") + base
+    return first.to_bytes(8, "little") + blob[8:]
+
+
 def _shift_blocks(blocks: DataFrame, base: int, seg_base: int) -> DataFrame:
     """Shift a sub-index's blocks by ``base`` docIDs (+ segment ids)."""
-    from lucene_spark.functions.forutil import fordelta_decode, fordelta_encode
-
     if base == 0 and seg_base == 0:
         return blocks
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            new_blobs = []
-            for blob in pdf["docs_packed"].values:
-                docs = fordelta_decode(bytes(blob)) + base
-                # re-encode with the env-aware codec (the same switch
-                # fordelta_decode honors); under v2 the shift touches
-                # only the 8-byte block base — gaps and the relative
-                # zone bitmap are unchanged
-                new_blobs.append(fordelta_encode(docs))
-            pdf["docs_packed"] = new_blobs
+            pdf["docs_packed"] = [
+                _shift_doc_blob(bytes(b), base) for b in pdf["docs_packed"].values
+            ]
             pdf["segment_id"] = pdf["segment_id"].values + seg_base
             pdf["first_doc"] = pdf["first_doc"].values + base
             pdf["max_doc"] = pdf["max_doc"].values + base

@@ -30,10 +30,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from .builder import (
@@ -54,48 +51,27 @@ def save_simpletext(index: InvertedIndex, index_dir: str) -> None:
         raise NotImplementedError(
             "SimpleText analog does not serialize per-position payloads"
         )
-    from lucene_spark.functions.forutil import (
-        delta_decode,
-        for_decode_stream,
-        fordelta_decode,
-        pfor_decode,
-    )
+    from .postings import decode_frame
 
     has_pos = index.has_positions
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = []
-            for i in range(len(pdf)):
-                seg = int(pdf["segment_id"].values[i])
-                term = pdf["term"].values[i]
-                docs = fordelta_decode(bytes(pdf["docs_packed"].values[i]))
-                freqs = pfor_decode(bytes(pdf["freqs_packed"].values[i]))
-                if has_pos:
-                    stream = for_decode_stream(
-                        bytes(pdf["positions_packed"].values[i])
-                    )
-                    bounds = np.concatenate([[0], np.cumsum(freqs)])
-                    for j in range(len(docs)):
-                        pos = delta_decode(stream[bounds[j] : bounds[j + 1]])
-                        lines.append(
-                            f"seg={seg} doc={int(docs[j])} freq={int(freqs[j])} "
-                            f"pos={','.join(str(int(p)) for p in pos)} term={term}"
-                        )
-                else:
-                    for j in range(len(docs)):
-                        lines.append(
-                            f"seg={seg} doc={int(docs[j])} "
-                            f"freq={int(freqs[j])} term={term}"
-                        )
-            yield pd.DataFrame({"value": lines})
-
-    cols = ["segment_id", "term", "docs_packed", "freqs_packed"]
+    # one decode pass, then pure JVM formatting of the posting lines
+    posts = decode_frame(
+        index.blocks,
+        ["segment_id", "doc_id", "term", "freq"] + (["positions"] if has_pos else []),
+    )
     if has_pos:
-        cols.append("positions_packed")
-    index.blocks.select(*cols).mapInPandas(fn, "value string").write.mode(
-        "overwrite"
-    ).text(os.path.join(index_dir, "postings"))
+        line = F.format_string(
+            "seg=%d doc=%d freq=%d pos=%s term=%s",
+            "segment_id", "doc_id", "freq",
+            F.array_join(F.col("positions").cast("array<string>"), ","), "term",
+        )
+    else:
+        line = F.format_string(
+            "seg=%d doc=%d freq=%d term=%s", "segment_id", "doc_id", "freq", "term"
+        )
+    posts.select(line.alias("value")).write.mode("overwrite").text(
+        os.path.join(index_dir, "postings")
+    )
 
     # norms: pure JVM formatting, no Python
     index.norms.select(

@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.smallfloat import byte4_to_int
 from ..index.builder import InvertedIndex
-from .parity import B, K1, _decode_postings
+from ..index.postings import read_postings
+from .parity import B, K1
 
 __all__ = ["blended_term_topk"]
 
@@ -54,7 +55,7 @@ def blended_term_topk(
     # adjustFrequencies: df is the max of all doc freqs
     df_blended = max(stats[t] for t in present)
     n, sttf = index.doc_count, index.sum_total_term_freq
-    posts = _decode_postings(index, present)
+    posts = read_postings(index, present)
     dlq = spark.createDataFrame(
         [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
         "norm int, dl_q int",

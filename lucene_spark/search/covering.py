@@ -21,7 +21,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lucene_spark.index.builder import InvertedIndex
-from lucene_spark.search.parity import _decode_postings
+from lucene_spark.index.postings import read_postings
 
 __all__ = ["covering_matches"]
 
@@ -39,7 +39,7 @@ def covering_matches(
     """
     terms = list(dict.fromkeys(terms))
     nmatch = (
-        _decode_postings(index, terms)
+        read_postings(index, terms)
         .select("doc_id", "term")
         .distinct()
         .groupBy("doc_id")

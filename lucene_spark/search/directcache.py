@@ -27,7 +27,8 @@ from typing import Dict, Iterable, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from ..index.builder import InvertedIndex
-from .parity import _decode_postings, bm25_topk_f64
+from ..index.postings import read_postings
+from .parity import bm25_topk_f64
 
 __all__ = ["DirectPostingsCache"]
 
@@ -54,7 +55,7 @@ class DirectPostingsCache:
             ]
         self.index = index
         self.hot_terms = frozenset(terms)
-        self.posts = _decode_postings(index, sorted(self.hot_terms)).persist()
+        self.posts = read_postings(index, sorted(self.hot_terms)).persist()
         # materialize now — the reference decodes at reader OPEN, so a
         # query never pays the first-touch cost
         self.num_cached_postings = self.posts.count()
@@ -69,7 +70,7 @@ class DirectPostingsCache:
         if hot:
             parts.append(self.posts.filter(F.col("term").isin(hot)))
         if cold:
-            parts.append(_decode_postings(self.index, cold))
+            parts.append(read_postings(self.index, cold))
         if not parts:
             return self.posts.filter(F.lit(False))
         out = parts[0]

@@ -87,14 +87,14 @@ def boost_by_query_topk(
     `boost_terms`), unchanged elsewhere (`FunctionScoreQuery.java:78`
     — QueryValueSource yields boost where the sub-query matches, 1
     otherwise)."""
-    from lucene_spark.search.parity import _decode_postings
+    from lucene_spark.index.postings import read_postings
 
     scored = _bm25_scored_f64(index, term_boosts)
     # only PRESENCE of the boost query matters (QueryValueSource gate):
     # decode the boost terms' postings to a distinct doc set instead of
     # running the full scoring pipeline and discarding the scores
     bmatch = (
-        _decode_postings(index, list(boost_terms))
+        read_postings(index, list(boost_terms))
         .select("doc_id")
         .distinct()
         .withColumn("_b", F.lit(True))

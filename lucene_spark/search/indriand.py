@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.smallfloat import byte4_to_int
 from ..index.builder import InvertedIndex
-from .parity import _decode_postings
+from ..index.postings import read_postings
 
 __all__ = ["indri_and_topk"]
 
@@ -51,7 +51,7 @@ def indri_and_topk(
     n, sttf = index.doc_count, index.sum_total_term_freq
     boost_sum = sum(float(term_boosts[t]) for t in present)
 
-    posts = _decode_postings(index, present)
+    posts = read_postings(index, present)
     union_docs = posts.select("doc_id", "norm").distinct()
     dlq = spark.createDataFrame(
         [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],

@@ -45,13 +45,13 @@ def named_matches(
     (`findNamedMatches`). Returns (doc_id, names, n_matched), doc_id
     asc; docs matching no sub-query are absent, like the parent
     BooleanQuery SHOULD over the wrapped clauses."""
-    from lucene_spark.search.parity import _decode_postings
+    from lucene_spark.index.postings import read_postings
 
     parts = []
     for name in sorted(named_terms):
         terms = [t for t in named_terms[name]]
         docs = (
-            _decode_postings(index, terms)
+            read_postings(index, terms)
             .select("doc_id")
             .distinct()
             .select("doc_id", F.lit(name).alias("name"))

@@ -178,15 +178,9 @@ def document_terms(index, doc_id: int, with_positions: bool = False) -> DataFram
     """
     from pyspark.sql import functions as F
 
-    from .parity import _decode_postings
+    from lucene_spark.index.postings import read_postings
 
-    blocks = index.blocks.filter(
-        (F.col("first_doc") <= doc_id) & (F.col("max_doc") >= doc_id)
-    )
-    pruned = index.__class__(
-        **{**index.__dict__, "blocks": blocks}
-    )
-    posts = _decode_postings(pruned, None).filter(F.col("doc_id") == doc_id)
+    posts = read_postings(index, None, doc_range=(doc_id, doc_id))
     out = posts.select("term", F.col("freq").cast("long").alias("freq"))
     if with_positions:
         from .positional import decode_positions
@@ -194,9 +188,7 @@ def document_terms(index, doc_id: int, with_positions: bool = False) -> DataFram
         # the doc's own distinct terms (<= its dl — a bounded collect)
         doc_terms = [r["term"] for r in out.select("term").collect()]
         if doc_terms:
-            pos = decode_positions(
-                pruned, doc_terms, doc_range=(doc_id, doc_id)
-            ).filter(F.col("doc_id") == doc_id)
+            pos = decode_positions(index, doc_terms, doc_range=(doc_id, doc_id))
             out = out.join(
                 pos.select("term", F.col("positions")),
                 "term",

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lucene_spark.functions.smallfloat import byte4_to_int
 from lucene_spark.index.builder import InvertedIndex
+from lucene_spark.index.postings import read_postings
 from lucene_spark.search.searcher import IndexSearcher, _decode_score_udf  # noqa: F401
 
 import numpy as np
@@ -38,53 +39,6 @@ from pyspark.sql import types as T
 __all__ = ["bm25_topk_f64", "oracle_bm25_sql"]
 
 K1, B = 1.2, 0.75
-
-_POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("freq", T.IntegerType(), False),
-        T.StructField("norm", T.IntegerType(), False),
-    ]
-)
-
-
-def _decode_postings(
-    index: InvertedIndex, terms: Optional[list], max_doc: Optional[int] = None
-) -> DataFrame:
-    """Decode (doc_id, term, freq, norm byte) for the given terms
-    (None = all terms). ``max_doc`` prunes blocks via the skip-pointer
-    metadata (first_doc) before any decode."""
-    from lucene_spark.functions.forutil import fordelta_decode, pfor_decode
-
-    def fn(batches):
-        for pdf in batches:
-            outs = []
-            for term, docs_b, freqs_b, norms_b in zip(
-                pdf["term"].values,
-                pdf["docs_packed"].values,
-                pdf["freqs_packed"].values,
-                pdf["norms_raw"].values,
-            ):
-                docs = fordelta_decode(bytes(docs_b))
-                freqs = pfor_decode(bytes(freqs_b)).astype(np.int32)
-                norms = np.frombuffer(bytes(norms_b), dtype=np.uint8).astype(np.int32)
-                outs.append(
-                    pd.DataFrame(
-                        {"doc_id": docs, "term": term, "freq": freqs, "norm": norms}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    blocks = index.blocks
-    if terms is not None:
-        blocks = blocks.filter(F.col("term").isin(terms))
-    if max_doc is not None:
-        blocks = blocks.filter(F.col("first_doc") <= max_doc)
-    return blocks.select(
-        "term", "docs_packed", "freqs_packed", "norms_raw"
-    ).mapInPandas(fn, _POSTINGS_SCHEMA)
 
 
 def _bm25_scored_f64(
@@ -109,7 +63,7 @@ def _bm25_scored_f64(
     # `posts` seam: a pre-decoded (doc_id, term, freq, norm) frame —
     # the DirectPostingsFormat cache path injects its in-memory copy
     if posts is None:
-        posts = _decode_postings(index, all_terms)
+        posts = read_postings(index, all_terms)
 
     # 256-row broadcast: norm byte → quantized decoded length
     dlq = spark.createDataFrame(
@@ -216,7 +170,7 @@ def similarity_topk_f64(
     """
     spark = index.spark
     terms = sorted(set(term_boosts))
-    posts = _decode_postings(index, terms)
+    posts = read_postings(index, terms)
     dlq = spark.createDataFrame(
         [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
         "norm int, dl_q int",
@@ -479,7 +433,7 @@ def synonym_bm25_f64(index: InvertedIndex, terms: list, k: int = 10) -> DataFram
         return spark.createDataFrame([], "doc_id long, score double")
     n, sttf = index.doc_count, index.sum_total_term_freq
     weight = _f64_idf(max(stats.values()), n)
-    posts = _decode_postings(index, list(stats))
+    posts = read_postings(index, list(stats))
     freqs = (
         posts.groupBy("doc_id")
         .agg(F.sum("freq").alias("freq"), F.max("norm").alias("norm"))
@@ -537,7 +491,7 @@ def dismax_f64(
     if not stats:
         return spark.createDataFrame([], "doc_id long, score double")
     n, sttf = index.doc_count, index.sum_total_term_freq
-    posts = _decode_postings(index, list(stats)).join(_dlq_col(spark, index), "norm")
+    posts = read_postings(index, list(stats)).join(_dlq_col(spark, index), "norm")
     weight_map = F.create_map(
         *[
             F.lit(x)
@@ -755,7 +709,7 @@ def combined_field_f64(
 
     # per-doc combined freq + combined quantized length
     text_posts = (
-        _decode_postings(index, [term]).select("doc_id", "freq")
+        read_postings(index, [term]).select("doc_id", "freq")
         if df_text
         else spark.createDataFrame([], "doc_id long, freq int")
     )
@@ -1000,7 +954,7 @@ def blended_fuzzy_f64(
     bdf = max(int(r["doc_freq"]) for r in exp)
     n, sttf = index.doc_count, index.sum_total_term_freq
     weight = _f64_idf(bdf, n)
-    posts = _decode_postings(index, terms).join(_dlq_col(spark, index), "norm")
+    posts = read_postings(index, terms).join(_dlq_col(spark, index), "norm")
     scored = (
         posts.withColumn("s", _f64_score_col(weight, n, sttf))
         .groupBy("doc_id")

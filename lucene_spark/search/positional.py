@@ -31,7 +31,7 @@ Python outside the batched kernels.
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Tuple
+from typing import Dict, List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -40,13 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucene_spark.functions.bm25 import BM25, bm25_idf
-from lucene_spark.functions.forutil import (
-    delta_decode,
-    for_decode_stream,
-    fordelta_decode,
-    pfor_decode,
-)
 from lucene_spark.index.builder import InvertedIndex
+from lucene_spark.index.postings import read_postings
 
 __all__ = [
     "decode_positions",
@@ -58,28 +53,12 @@ __all__ = [
     "dismax_topk",
 ]
 
-_POS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("freq", T.IntegerType(), False),
-        T.StructField("norm", T.IntegerType(), False),
-        T.StructField("positions", T.ArrayType(T.IntegerType()), False),
-    ]
-)
-
 _FREQ_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("freq", T.DoubleType(), False),
         T.StructField("norm", T.IntegerType(), False),
     ]
-)
-
-
-_PAY_SCHEMA = T.StructType(
-    _POS_SCHEMA.fields
-    + [T.StructField("payloads", T.ArrayType(T.FloatType()), False)]
 )
 
 
@@ -90,85 +69,17 @@ def decode_positions(
     with_payloads: bool = False,
     max_tasks: int = None,
 ) -> DataFrame:
-    """Decode (doc_id, term, freq, norm, positions[, payloads]) for the
-    given terms — the single posting-block read path every positional
-    consumer shares (phrases, spans, rescore, payload scoring).
-
-    ``doc_range=(lo, hi)`` prunes posting blocks whose
-    [first_doc, max_doc] does not overlap the range BEFORE the Python
-    decode — the skip-list advance (`Lucene103PostingsReader` skip
-    data) for consumers that only need a docID window (e.g. rescoring
-    a first-pass top-N). ``with_payloads=True`` (PostingsEnum's
-    PAYLOADS flag) adds the per-position float32 payload arrays."""
-    if not index.has_positions:
-        raise ValueError("index was built without positions=True")
-    if with_payloads and not index.has_payloads:
-        raise ValueError("index was built without payloads=True")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for i in range(len(pdf)):
-                term = pdf["term"].values[i]
-                docs = fordelta_decode(
-                    bytes(pdf["docs_packed"].values[i])
-                )
-                freqs = pfor_decode(bytes(pdf["freqs_packed"].values[i]))
-                norms = np.frombuffer(
-                    bytes(pdf["norms_raw"].values[i]), dtype=np.uint8
-                ).astype(np.int32)
-                stream = for_decode_stream(
-                    bytes(pdf["positions_packed"].values[i])
-                )
-                bounds = np.cumsum(freqs)[:-1]
-                positions = [
-                    np.cumsum(chunk).astype(np.int32)
-                    for chunk in np.split(stream, bounds)
-                ]
-                out = pd.DataFrame(
-                    {
-                        "doc_id": docs,
-                        "term": term,
-                        "freq": freqs.astype(np.int32),
-                        "norm": norms,
-                        "positions": positions,
-                    }
-                )
-                if with_payloads:
-                    pay = np.frombuffer(
-                        bytes(pdf["payloads_packed"].values[i]),
-                        dtype=np.float32,
-                    )
-                    out["payloads"] = list(np.split(pay, bounds))
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    blocks = index.blocks.filter(F.col("term").isin(list(set(terms))))
-    if doc_range is not None:
-        lo, hi = doc_range
-        blocks = blocks.filter(
-            (F.col("max_doc") >= int(lo)) & (F.col("first_doc") <= int(hi))
-        )
-    cols = ["term", "docs_packed", "freqs_packed", "norms_raw", "positions_packed"]
-    if with_payloads:
-        cols.append("payloads_packed")
-    if max_tasks is not None:
-        # small term sets leave most of the blocks frame's partitions
-        # empty after the term filter, and every partition still pays a
-        # Python-worker dispatch in mapInPandas (~10ms each; measured
-        # 0.77s for 24 blocks across 64 partitions). Narrow coalesce —
-        # no shuffle — caps the dispatch count for few-term consumers
-        # (highlighting, short phrases) without touching wide decodes.
-        blocks = blocks.coalesce(int(max_tasks))
-    decoded = blocks.select(*cols).mapInPandas(
-        fn, _PAY_SCHEMA if with_payloads else _POS_SCHEMA
+    """(doc_id, term, freq, norm, positions[, payloads]) of the given
+    terms: :func:`lucene_spark.index.postings.read_postings` with the
+    POSITIONS (and, with ``with_payloads``, PAYLOADS) flag."""
+    return read_postings(
+        index,
+        terms,
+        positions=True,
+        payloads=with_payloads,
+        doc_range=doc_range,
+        max_tasks=max_tasks,
     )
-    if doc_range is not None:
-        decoded = decoded.filter(
-            (F.col("doc_id") >= int(lo)) & (F.col("doc_id") <= int(hi))
-        )
-    return decoded
 
 
 def _exact_phrase_kernel(pos_cols: List[np.ndarray], offsets: List[int]) -> float:
@@ -494,9 +405,7 @@ def phrase_topk(
 
 def synonym_freqs(index: InvertedIndex, term_boosts: Dict[str, float]) -> DataFrame:
     """Per-doc boost-weighted summed freq across synonym terms."""
-    from lucene_spark.search.parity import _decode_postings
-
-    posts = _decode_postings(index, list(term_boosts))
+    posts = read_postings(index, list(term_boosts))
     boosts = F.create_map(
         *[F.lit(x) for tb in term_boosts.items() for x in (tb[0], float(tb[1]))]
     )
@@ -565,7 +474,7 @@ def dismax_topk(
 
     searcher = IndexSearcher(index, k1=k1, b=b)
     ctx = searcher._bind_terms(list(term_boosts))
-    scored = searcher._scored_terms(ctx, dict(term_boosts))
+    scored = searcher._decoded(searcher._terms_plan(ctx, dict(term_boosts)))
     agg = scored.groupBy("doc_id").agg(
         F.max("score").alias("mx"), F.sum("score").alias("sm")
     )

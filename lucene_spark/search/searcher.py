@@ -70,8 +70,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucene_spark.functions.bm25 import BM25
-from lucene_spark.functions.forutil import fordelta_decode, pfor_decode
 from lucene_spark.index.builder import InvertedIndex
+from lucene_spark.index.postings import decode_blocks, decode_frame
 from lucene_spark.search.query import (
     BooleanQuery,
     BoostQuery,
@@ -113,39 +113,36 @@ _TOPK_SCHEMA = T.StructType(
 _BLOCK_COLS = ("term", "docs_packed", "freqs_packed", "norms_raw")
 
 
-def _decode_score(terms, docs_packed, freqs_packed, norms_raw, weights):
-    """Decode + float32-score one batch of posting blocks.
+def _decode_score(batch, weights):
+    """Decode + float32-score one batch of posting blocks (``batch[c]``
+    for c in ``_BLOCK_COLS``).
 
-    The one scoring kernel of both routes. Per block only the FOR/PFor
-    unpacking runs; the BM25 arithmetic runs once over the batch with
-    per-posting weight and normInverse gathers, the same float32 ops
-    as ``w - w / (1 + freq * cache[norm])`` on each block alone.
+    The one scoring kernel of both routes. Decode is the shared
+    posting-block kernel; the BM25 arithmetic runs once over the batch
+    with per-posting weight and normInverse gathers, the same float32
+    ops as ``w - w / (1 + freq * cache[norm])`` on each block alone.
 
     weights: term → (float32 weight, float32[256] normInverse cache).
     Returns (doc_id int64, index into ``list(weights)`` per posting,
     float32 score).
     """
     names = list(weights)
-    if len(terms) == 0:
+    if len(batch["term"]) == 0:
         return (
             np.empty(0, np.int64),
             np.empty(0, np.intp),
             np.empty(0, np.float32),
         )
     code_of = {t: i for i, t in enumerate(names)}
-    docs = [fordelta_decode(bytes(b)) for b in docs_packed]
-    lens = np.fromiter((d.size for d in docs), np.intp, len(docs))
+    p = decode_blocks(batch)
     term_of = np.repeat(
-        np.fromiter((code_of[t] for t in terms), np.intp, len(terms)), lens
+        np.fromiter((code_of[t] for t in batch["term"]), np.intp, len(p.lens)), p.lens
     )
-    freqs = np.concatenate(
-        [pfor_decode(bytes(b)) for b in freqs_packed]
-    ).astype(np.float32)
-    norms = np.frombuffer(b"".join(bytes(b) for b in norms_raw), dtype=np.uint8)
+    freqs = p.freq.astype(np.float32)
     w = np.array([weights[t][0] for t in names], dtype=np.float32)[term_of]
-    ni = np.stack([weights[t][1] for t in names])[term_of, norms]
+    ni = np.stack([weights[t][1] for t in names])[term_of, p.norm]
     score = w - w / (np.float32(1.0) + freqs * ni)
-    return np.concatenate(docs), term_of, score
+    return p.doc_id, term_of, score
 
 
 def _decode_score_udf(weights: Dict[str, Tuple[float, np.ndarray]]):
@@ -157,9 +154,7 @@ def _decode_score_udf(weights: Dict[str, Tuple[float, np.ndarray]]):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            docs, term_of, score = _decode_score(
-                *(pdf[c].values for c in _BLOCK_COLS), weights
-            )
+            docs, term_of, score = _decode_score(pdf, weights)
             yield pd.DataFrame(
                 {
                     "doc_id": docs,
@@ -220,20 +215,6 @@ def _block_keys(rows):
     for r in rows:
         cond = cond | ((F.col("term") == r["term"]) & (F.col("first_doc") == r["first_doc"]))
     return cond
-
-
-def _decode_docs_udf():
-    """mapInPandas kernel: block rows → doc_id only (unscored match)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = [
-                fordelta_decode(bytes(b)) for b in pdf["docs_packed"].values
-            ]
-            if outs:
-                yield pd.DataFrame({"doc_id": np.concatenate(outs)})
-
-    return fn
 
 
 @dataclass
@@ -328,7 +309,12 @@ class IndexSearcher:
         return df.join(hidden, "doc_id", "left_anti")
 
     def search(self, query: Query, k: int = 10, mode: str = "auto") -> DataFrame:
-        """Top-k (doc_id, score) ordered by score desc, doc_id asc."""
+        """Top-k (doc_id, score) ordered by score desc, doc_id asc.
+
+        ``mode``: "auto" (cost-based), "exhaustive" or "wand"; anything
+        else raises ValueError."""
+        if mode not in ("auto", "exhaustive", "wand"):
+            raise ValueError(f"unknown search mode {mode!r}")
         q = rewrite(query, self.index.terms)
         ctx = self._bind(q)
         if mode == "auto":
@@ -345,12 +331,7 @@ class IndexSearcher:
         plan = self._plan(q, ctx, k, mode)
         if plan is not None and self._local_route(ctx):
             return self._local_topk(plan, k)
-        if plan is not None:
-            result = self._frame(plan)
-        elif mode == "maxscore" and self._wandable(q):
-            result = self._search_maxscore(q, ctx, k)
-        else:
-            result = self._eval(q, ctx, boost=1.0)
+        result = self._frame(plan) if plan is not None else self._eval(q, ctx, boost=1.0)
         return (
             self._live(result)
             .select("doc_id", F.col("score").cast("float").alias("score"))
@@ -362,12 +343,9 @@ class IndexSearcher:
     def _plan(self, q: Query, ctx: _Ctx, k: int, mode: str) -> Optional[_Plan]:
         """Block selection of a term-shaped query (a boosted term, a flat
         term boolean, a WAND disjunction); None for every other shape,
-        which evaluates through :meth:`_eval` / MAXSCORE."""
-        if self._wandable(q):
-            if mode == "wand":
-                return self._wand_plan(q, ctx, k)
-            if mode == "maxscore":
-                return None
+        which evaluates through :meth:`_eval`."""
+        if mode == "wand" and self._wandable(q):
+            return self._wand_plan(q, ctx, k)
         boost = 1.0
         while isinstance(q, BoostQuery):
             boost *= q.boost
@@ -404,7 +382,7 @@ class IndexSearcher:
             docs, total = _combine(
                 plan,
                 *_decode_score(
-                    *(tbl.column(c).to_pylist() for c in _BLOCK_COLS), plan.weights
+                    {c: tbl.column(c).to_pylist() for c in _BLOCK_COLS}, plan.weights
                 ),
             )
         score = total.astype(np.float32)
@@ -581,23 +559,20 @@ class IndexSearcher:
     def _doc_freq_norm(self, term: str, doc_id: int) -> Optional[Tuple[int, int]]:
         """(freq, norm_byte) of `doc_id` in `term`'s postings, from the
         block(s) whose [first_doc, max_doc] covers it (skip-list seek)."""
+        cols = ("docs_packed", "freqs_packed", "norms_raw")
         rows = (
             self.index.blocks.filter(
                 (F.col("term") == term)
                 & (F.col("first_doc") <= doc_id)
                 & (F.col("max_doc") >= doc_id)
             )
-            .select("docs_packed", "freqs_packed", "norms_raw")
+            .select(*cols)
             .collect()
         )
-        for r in rows:
-            docs = fordelta_decode(bytes(r["docs_packed"]))
-            idx = np.where(docs == doc_id)[0]
-            if idx.size:
-                freqs = pfor_decode(bytes(r["freqs_packed"]))
-                norms = np.frombuffer(bytes(r["norms_raw"]), dtype=np.uint8)
-                i = int(idx[0])
-                return int(freqs[i]), int(norms[i])
+        p = decode_blocks({c: [r[c] for r in rows] for c in cols})
+        hit = np.flatnonzero(p.doc_id == doc_id)
+        if hit.size:
+            return int(p.freq[hit[0]]), int(p.norm[hit[0]])
         return None
 
     # -- weight resolution ---------------------------------------------
@@ -650,15 +625,10 @@ class IndexSearcher:
     def _term_blocks(self, terms: List[str]) -> DataFrame:
         return self.index.blocks.filter(F.col("term").isin(terms))
 
-    def _scored_terms(self, ctx: _Ctx, term_boosts: Dict[str, float]) -> DataFrame:
-        """(doc_id, term, score) of every posting of the given terms, in
-        one decode+score pass."""
-        plan = self._terms_plan(ctx, term_boosts)
+    def _decoded(self, plan: _Plan) -> DataFrame:
+        """(doc_id, term, score) of every posting of the plan's blocks."""
         if plan.blocks is None:
             return self.index.spark.createDataFrame([], _SCORED_SCHEMA)
-        return self._decoded(plan)
-
-    def _decoded(self, plan: _Plan) -> DataFrame:
         return plan.blocks.select(*_BLOCK_COLS).mapInPandas(
             _decode_score_udf(plan.weights), _SCORED_SCHEMA
         )
@@ -675,11 +645,7 @@ class IndexSearcher:
         if isinstance(q, TermQuery):
             if q.term not in ctx.term_stats:
                 return spark.createDataFrame([], _DOCS_SCHEMA)
-            return (
-                self._term_blocks([q.term])
-                .select("docs_packed")
-                .mapInPandas(_decode_docs_udf(), _DOCS_SCHEMA)
-            )
+            return decode_frame(self._term_blocks([q.term]), ["doc_id"])
         if isinstance(q, MultiTermFilterDocsQuery):
             # Above-cap multi-term expansion: the matched-term set
             # stays a DataFrame and SEMI-JOINS the posting blocks — no
@@ -687,11 +653,7 @@ class IndexSearcher:
             # join shuffles on the term key (or broadcasts when the
             # matched set is small — AQE decides from runtime stats).
             matched = self.index.terms.filter(q.source.term_filter()).select("term")
-            return (
-                self.index.blocks.join(matched, "term", "semi")
-                .select("docs_packed")
-                .mapInPandas(_decode_docs_udf(), _DOCS_SCHEMA)
-            )
+            return decode_frame(self.index.blocks.join(matched, "term", "semi"), ["doc_id"])
         if isinstance(q, PhraseQuery):
             from lucene_spark.search.positional import phrase_freqs
 
@@ -742,12 +704,7 @@ class IndexSearcher:
                 present = [t for t in flat_opt if t in ctx.term_stats]
                 if not present:
                     return spark.createDataFrame([], _DOCS_SCHEMA)
-                return (
-                    self._term_blocks(present)
-                    .select("docs_packed")
-                    .mapInPandas(_decode_docs_udf(), _DOCS_SCHEMA)
-                    .distinct()
-                )
+                return decode_frame(self._term_blocks(present), ["doc_id"]).distinct()
 
             docs: Optional[DataFrame] = None
             if opt:
@@ -876,9 +833,6 @@ class IndexSearcher:
         if len(set(scoring)) != len(scoring):
             return None
         return out
-
-    def _eval_boolean_flat(self, flat, q: BooleanQuery, ctx: _Ctx, boost: float) -> DataFrame:
-        return self._frame(self._flat_plan(flat, q, ctx, boost))
 
     def _flat_plan(self, flat, q: BooleanQuery, ctx: _Ctx, boost: float) -> _Plan:
         """One decode pass for a flat term-only boolean: presence and
@@ -1021,7 +975,7 @@ class IndexSearcher:
         if flat is not None and any(
             o in (Occur.SHOULD, Occur.MUST) for o, _ in flat
         ):
-            return self._eval_boolean_flat(flat, q, ctx, boost)
+            return self._frame(self._flat_plan(flat, q, ctx, boost))
         should = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
         must = [c.query for c in q.clauses if c.occur == Occur.MUST]
         filt = [c.query for c in q.clauses if c.occur == Occur.FILTER]
@@ -1099,7 +1053,7 @@ class IndexSearcher:
             ]
         else:
             docs, _, score = _decode_score(
-                *([r[c] for r in head_rows] for c in _BLOCK_COLS), weights
+                {c: [r[c] for r in head_rows] for c in _BLOCK_COLS}, weights
             )
             top = -np.sort(-_sum_by_doc(docs, score)[1])[:k]
         return float(top[k - 1]) if len(top) >= k else 0.0
@@ -1113,68 +1067,6 @@ class IndexSearcher:
                 sub, boost = sub.query, sub.boost
             term_boosts[sub.term] = term_boosts.get(sub.term, 0.0) + boost
         return term_boosts
-
-    def _search_maxscore(self, q: BooleanQuery, ctx: _Ctx, k: int) -> DataFrame:
-        """MAXSCORE bulk disjunction (`search/MaxScoreBulkScorer.java`,
-        selected by `BooleanScorerSupplier.java:283-305`).
-
-        Terms sort by max block upper bound ascending; the longest
-        prefix whose cumulative Σ max_ub < θ is NON-ESSENTIAL: a doc
-        containing only those terms cannot reach θ, hence cannot enter
-        the top-k. Candidate docs therefore come from the ESSENTIAL
-        lists alone; non-essential postings are scored only for
-        candidates (semi-join pushdown shrinks both the decode output
-        and the aggregation shuffle). Result-identical to exhaustive:
-        every true top-k doc scores ≥ θ, so it appears in an essential
-        list and its full score (essential + non-essential parts) is
-        computed exactly.
-        """
-        term_boosts = self._disjunction_boosts(q)
-        scorers = {t: ctx.scorer(t, b) for t, b in term_boosts.items()}
-        scorers = {t: s for t, s in scorers.items() if s is not None}
-        if not scorers:
-            return self.index.spark.createDataFrame([], "doc_id long, score double")
-        weights = {t: (s.weight, s.cache) for t, s in scorers.items()}
-        self._load_impact_heads(list(scorers))
-        heads = {t: self._impact_cache[t] for t in scorers}
-        theta = self._bootstrap_theta(scorers, weights, heads, k)
-
-        max_ub = {
-            t: float(scorers[t].weight) * heads[t]["mxf"] * (1.0 + 1e-5)
-            for t in scorers
-            if heads[t]["heads"]
-        }
-        by_ub = sorted(max_ub, key=lambda t: max_ub[t])
-        non_essential, acc_ub = [], 0.0
-        for t in by_ub:
-            if acc_ub + max_ub[t] < theta:
-                non_essential.append(t)
-                acc_ub += max_ub[t]
-            else:
-                break
-        essential = [t for t in scorers if t not in set(non_essential)]
-        if not non_essential:
-            # θ too low to drop anything → plain exhaustive single pass
-            return (
-                self._scored_terms(ctx, dict(term_boosts))
-                .groupBy("doc_id")
-                .agg(F.sum("score").alias("score"))
-            )
-        ess = (
-            self._scored_terms(ctx, {t: term_boosts[t] for t in essential})
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-        )
-        non = (
-            self._scored_terms(ctx, {t: term_boosts[t] for t in non_essential})
-            .join(ess.select("doc_id"), "doc_id", "semi")
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("s_non"))
-        )
-        return ess.join(non, "doc_id", "left").select(
-            "doc_id",
-            (F.col("score") + F.coalesce(F.col("s_non"), F.lit(0.0))).alias("score"),
-        )
 
     def _max_impact(self):
         """Column x = max over a block's impacts of freq·normInverse.

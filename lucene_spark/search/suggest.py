@@ -539,15 +539,20 @@ def file_dictionary(
         F.split("value", _re.escape(field_delimiter)).alias("f")
     )
     # lazy single-pass validation, like FileDictionary raising during
-    # iteration: the error column only evaluates on >3-field rows
+    # iteration: the error columns only evaluate on >3-field rows and on
+    # weights that parse as neither long nor double
+    raw_weight = F.element_at("f", 2)
     weight = F.when(
         F.size("f") > 3,
         F.raise_error(F.lit("More than 3 fields in one line")).cast("long"),
     ).otherwise(
         F.when(F.size("f") < 2, F.lit(1).cast("long")).otherwise(
             F.coalesce(
-                F.element_at("f", 2).try_cast("long"),
-                F.element_at("f", 2).try_cast("double").cast("long"),
+                raw_weight.try_cast("long"),
+                raw_weight.try_cast("double").cast("long"),
+                F.raise_error(
+                    F.concat(F.lit("Unparsable weight: "), raw_weight)
+                ).cast("long"),
             )
         )
     )

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from lucene_spark.index import InvertedIndex
 from lucene_spark.index.bpmerge import bp_reordering_merge
+from lucene_spark.index.check import check_index
 from lucene_spark.search.parity import _bm25_scored_f64
 
 
@@ -38,6 +39,11 @@ def test_reorder_flag_and_invariance(spark):
     )
     assert diag == {0: True, 2: True}
     assert new_idx.num_segments == 2
+    # the remapped, re-encoded blocks are CheckIndex-clean (a merged
+    # segment spans its sources' ranges, so segment_bounds is skipped)
+    report = check_index(new_idx)
+    report.pop("segment_bounds")
+    assert all(v == 0 for v in report.values() if isinstance(v, int)), report
 
     # rank/score invariance modulo the id permutation
     base_idx = _build(spark, corpus)

@@ -173,6 +173,20 @@ def test_file_dictionary_too_many_fields(spark):
         file_dictionary(spark, ["a\t1\tp\textra"]).collect()
 
 
+def test_file_dictionary_unparsable_weight(spark):
+    import pytest
+
+    from lucene_spark.search.suggest import file_dictionary
+
+    # a weight that is neither long nor double raises (the reference's
+    # NumberFormatException), lazily like the >3-fields check
+    frame = file_dictionary(spark, ["ok\t2.5", "term\tabc"])
+    with pytest.raises(Exception, match="Unparsable weight: abc"):
+        frame.collect()
+    rows = file_dictionary(spark, ["ok\t2.5", "x\t7", "solo"]).collect()
+    assert sorted((r["term"], r["weight"]) for r in rows) == [("ok", 2), ("solo", 1), ("x", 7)]
+
+
 def test_plain_text_dictionary(spark, tmp_path):
     from lucene_spark.search.suggest import plain_text_dictionary
 

@@ -6,7 +6,9 @@ from pyspark.sql import functions as F
 
 from lucene_spark.index import InvertedIndex
 from lucene_spark.index.check import check_index
-from lucene_spark.index.multireader import multi_reader
+from lucene_spark.functions.forutil import fordelta_encode
+from lucene_spark.index.multireader import _shift_blocks, _shift_doc_blob, multi_reader
+from lucene_spark.index.postings import decode_blocks
 from lucene_spark.search.parity import bm25_topk_f64
 
 
@@ -62,6 +64,17 @@ def test_doc_base_offsets_remap(spark, corpus):
     hi = InvertedIndex.build(local_hi, analyzer="simple", docs_per_segment=15)
     multi = multi_reader([lo, hi])  # default cumulative bases [0, 30]
     assert _res(multi) == _res(whole)
+    # the shift rewrites only each doc block's 8-byte base: every shifted
+    # blob equals a fresh encode of the shifted docIDs, byte for byte
+    before = hi.blocks.orderBy("term", "first_doc").collect()
+    after = _shift_blocks(hi.blocks, 30, 2).orderBy("term", "first_doc").collect()
+    assert len(after) == len(before) > 0
+    for old, new in zip(before, after):
+        docs = decode_blocks({"docs_packed": [old["docs_packed"]]}).doc_id
+        assert bytes(new["docs_packed"]) == fordelta_encode(docs + 30)
+        assert (new["first_doc"], new["max_doc"]) == (docs[0] + 30, docs[-1] + 30)
+        assert new["doc_zones"] == old["doc_zones"]
+    assert _shift_doc_blob(b"", 30) == b"" == fordelta_encode([])
     # shifted composite still passes the full index check (zones,
     # bounds, chain invariants): every violation counter is zero
     report = check_index(multi)

@@ -95,6 +95,14 @@ def test_payloads_survive_merge_and_reclaim(spark):
         for r in payload_score_topk(reclaimed, "hash", func="sum", k=10).collect()
     }
     assert got2 == {0: 4.0, 2: 0.5, 5: 6.0}
+    # the reclaim re-encode of the merged payload blocks is CheckIndex-
+    # clean (its merged segment spans its sources' ranges: segment_bounds
+    # is skipped)
+    from lucene_spark.index.check import check_index
+
+    report = check_index(reclaimed)
+    report.pop("segment_bounds")
+    assert all(v == 0 for v in report.values() if isinstance(v, int)), report
 
 
 def test_deletes_hidden_from_scores(spark):

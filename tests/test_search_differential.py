@@ -126,7 +126,7 @@ def test_flat_fast_path_equals_general_path(spark, documents):
             continue
         fast = {
             (r["doc_id"], round(r["score"], 6))
-            for r in s._eval_boolean_flat(flat, bq, ctx, 1.0).collect()
+            for r in s._frame(s._flat_plan(flat, bq, ctx, 1.0)).collect()
         }
         # force the general path by bypassing the fast-path branch
         should = [c for c in bq.clauses if c.occur != Occur.MUST_NOT]
@@ -215,7 +215,7 @@ def test_grouped_fast_path_equals_general(spark, documents):
         assert flat is not None, qs  # shape must take the fast path
         fast = {
             (r["doc_id"], round(r["score"], 6))
-            for r in s._eval_boolean_flat(flat, q, ctx, 1.0).collect()
+            for r in s._frame(s._flat_plan(flat, q, ctx, 1.0)).collect()
         }
         orig = s._flat_term_clauses
         s._flat_term_clauses = lambda _q: None
@@ -230,10 +230,10 @@ def test_grouped_fast_path_equals_general(spark, documents):
 
 
 @pytest.mark.parametrize("seed", [0, 3])
-def test_maxscore_equals_exhaustive_equals_naive(spark, seed):
-    """MAXSCORE essential/non-essential partition must be result-
-    identical to exhaustive (and the naive reference) on every
-    (docID, score) of the top-k."""
+def test_wand_boosted_disjunction_equals_naive(spark, seed):
+    """Block-max WAND over random boosted disjunctions (2-6 terms,
+    boosts up to 5, small k) must be result-identical to the naive
+    reference on every (docID, score) of the top-k."""
     rng = np.random.RandomState(seed)
     docs = _random_corpus(rng, n_docs=400, vocab_size=30)
     naive = NaiveIndex(docs)
@@ -261,15 +261,15 @@ def test_maxscore_equals_exhaustive_equals_naive(spark, seed):
         expected = naive.disjunction_topk(term_boosts, k)
         got = [
             (r["doc_id"], r["score"])
-            for r in searcher.search(q, k=k, mode="maxscore").collect()
+            for r in searcher.search(q, k=k, mode="wand").collect()
         ]
         assert [(d, pytest.approx(s, abs=1e-5)) for d, s in got] == expected
 
 
-def test_maxscore_partitions_lists(spark):
+def test_wand_exact_beside_weak_rare_term(spark):
     """A strong co-occurring pair + a weak rare term: θ exceeds the
-    weak term's max ub, so it must land in the non-essential set and
-    results must still be exact."""
+    weak term's max ub, so its blocks are prunable, and results must
+    still be exact."""
     texts = []
     for i in range(300):
         t = ["big", "big", "strong", "strong"] if i < 40 else ["filler"]
@@ -285,5 +285,10 @@ def test_maxscore_partitions_lists(spark):
         BooleanClause(TermQuery("weakterm"), Occur.SHOULD),
     )
     exh = [(r["doc_id"], r["score"]) for r in s.search(q, 10, "exhaustive").collect()]
-    mxs = [(r["doc_id"], r["score"]) for r in s.search(q, 10, "maxscore").collect()]
-    assert mxs == exh
+    wand = [(r["doc_id"], r["score"]) for r in s.search(q, 10, "wand").collect()]
+    assert wand == exh
+    # a removed or misspelled mode fails loudly instead of silently
+    # running exhaustive
+    for mode in ("maxscore", "exhuastive", ""):
+        with pytest.raises(ValueError, match="unknown search mode"):
+            s.search(q, 10, mode)
