@@ -217,7 +217,7 @@ class ParallelReader:
         """
         from pyspark.sql import functions as F
 
-        from ..search.parity import _bm25_scored_f64
+        from ..search.parity import _bm25_scored_f64, _topk
 
         scored = None
         for name, boosts in field_boosts.items():
@@ -227,9 +227,4 @@ class ParallelReader:
             scored = part if scored is None else scored.unionByName(part)
         if scored is None:
             raise ValueError("empty field_boosts")
-        out = scored.groupBy("doc_id").agg(F.sum("_s").alias("s"))
-        return (
-            out.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .select("doc_id", F.round("s", 4).alias("score"))
-        )
+        return _topk(scored.groupBy("doc_id").agg(F.sum("_s").alias("s")), k)

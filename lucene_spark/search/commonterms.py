@@ -49,7 +49,7 @@ def common_terms_topk(
     high_boost: float = 1.0,
 ) -> DataFrame:
     """Top-k (doc_id, score) for a CommonTermsQuery over the index."""
-    from .parity import _bm25_scored_f64
+    from .parity import _bm25_scored_f64, _topk
 
     if low_occur not in ("must", "should") or high_occur not in ("must", "should"):
         raise ValueError("occur must be 'must' or 'should' (MUST_NOT is rejected)")
@@ -95,8 +95,4 @@ def common_terms_topk(
                 "doc_id",
                 (F.col("s") + F.coalesce(F.col("s_high"), F.lit(0.0))).alias("s"),
             )
-    return (
-        combined.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    return _topk(combined, k)

@@ -11,9 +11,11 @@ The hot terms' blocks are decoded ONCE into a persisted
 ``(doc_id, term, freq, norm)`` DataFrame (Spark's in-memory columnar
 cache plays the int[] role, spilling to disk instead of OOMing — the
 guard the reference lacks).  Queries over cached terms read
-``InMemoryTableScan`` — no block decode, no Arrow hop; terms outside
-the cache fall back to the normal block-decode path and the two frames
-union.  Hot-set selection defaults to the highest-docFreq terms — the
+``InMemoryTableScan`` — no block decode; terms outside the cache fall
+back to the normal block-decode path and the two frames union.  The
+union still crosses to Python once, for the searcher kernel's score
+step, and combines with the same plan combine as the block path, so
+scores cannot drift between the two.  Hot-set selection defaults to the highest-docFreq terms — the
 terms whose decode cost dominates (Zipf), mirroring the reference's
 "you pay RAM for your biggest postings" trade-off; the memory bound is
 the cached terms' postings count (Σ docFreq of the hot set), chosen by
@@ -88,7 +90,8 @@ class DirectPostingsCache:
         filter_terms: Optional[list] = None,
     ) -> DataFrame:
         """Identical results to :func:`bm25_topk_f64`, served from the
-        cache wherever the query's terms are hot."""
+        cache wherever the query's terms are hot: the decoded rows
+        replace the plan's blocks (``posts=``)."""
         all_terms = sorted(
             set(term_boosts)
             | set(must_terms or [])

@@ -29,7 +29,7 @@ from typing import Dict, Optional
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lucene_spark.index.builder import InvertedIndex
-from lucene_spark.search.parity import _bm25_scored_f64
+from lucene_spark.search.parity import _bm25_scored_f64, _topk
 
 __all__ = ["function_score_topk", "boost_by_query_topk", "function_range_match"]
 
@@ -67,12 +67,7 @@ def function_score_topk(
         if mode == "multiply"
         else F.col("_fv")
     )
-    return (
-        joined.select("doc_id", s.alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round("s", 4).alias("score"))
-    )
+    return _topk(joined.select("doc_id", s.alias("s")), k)
 
 
 def boost_by_query_topk(
@@ -103,12 +98,7 @@ def boost_by_query_topk(
     s = F.when(F.col("_b"), F.col("s") * F.lit(float(boost_value))).otherwise(
         F.col("s")
     )
-    return (
-        joined.select("doc_id", s.alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round("s", 4).alias("score"))
-    )
+    return _topk(joined.select("doc_id", s.alias("s")), k)
 
 
 def function_range_match(

@@ -20,12 +20,12 @@ from __future__ import annotations
 
 from typing import Dict
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.smallfloat import byte4_to_int
 from ..index.builder import InvertedIndex
 from ..index.postings import read_postings
+from .parity import _dlq_col, _topk
+from .searcher import IndexSearcher
 
 __all__ = ["indri_and_topk"]
 
@@ -53,17 +53,13 @@ def indri_and_topk(
 
     posts = read_postings(index, present)
     union_docs = posts.select("doc_id", "norm").distinct()
-    dlq = spark.createDataFrame(
-        [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
-        "norm int, dl_q int",
-    )
     tb = spark.createDataFrame(
         [(t, float(term_boosts[t]), stats[t]) for t in present],
         "term string, boost double, ttf long",
     )
     # every (union doc × clause): matched freq or the smoothing 0
     pairs = (
-        union_docs.join(F.broadcast(dlq), "norm")
+        union_docs.join(_dlq_col(spark), "norm")
         .crossJoin(F.broadcast(tb))
         .join(
             posts.select("doc_id", "term", "freq"), ["doc_id", "term"], "left"
@@ -80,11 +76,4 @@ def indri_and_topk(
         .groupBy("doc_id")
         .agg((F.sum("s_t") / F.lit(boost_sum)).alias("s"))
     )
-    hidden = index.hidden_docs
-    if hidden is not None:
-        scored = scored.join(hidden, "doc_id", "left_anti")
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round("s", 4).alias("score"))
-    )
+    return _topk(IndexSearcher(index)._live(scored), k)

@@ -16,8 +16,9 @@ The query multi-vector is a handful of driver-side constants, so the
 whole MaxSim is a PURE JVM higher-order-function column —
 ``array_max(transform(doc_vectors, d → sim(q_i, d)))`` summed over
 the query tokens.  No UDF, no Arrow hop, no shuffle: at 100 TB the
-rescore is a broadcast join of the k-bounded first-pass hits against
-the doc multi-vector column plus one codegen'd projection.  Docs
+rescore is a semi join of the doc multi-vector column against the
+broadcast first-pass ids, a broadcast left join of the hits against
+that k-bounded result, and one codegen'd projection.  Docs
 missing the multi-vector score 0 (``combine``) or keep their
 first-pass score (``withFallbackToFirstPassScore``).
 """
@@ -102,19 +103,22 @@ def late_interaction_rescore(
 ) -> DataFrame:
     """Rescore first-pass hits by MaxSim (`LateInteractionRescorer`).
 
-    first_pass: k-bounded (id, score) hits — broadcast against the
-    corpus; docs: (id, multi-vector) table.  Missing multi-vectors
+    first_pass: k-bounded (id, score) hits; docs: (id, multi-vector)
+    table. Both joins are broadcast hash joins on the k-bounded side.  Missing multi-vectors
     score 0, or keep the first-pass score with
     ``fallback_to_first_pass=True`` (withFallbackToFirstPassScore).
     """
     fp = first_pass.select(
         F.col(id_col), F.col(score_col).alias("_fp_score")
     )
-    joined = F.broadcast(fp).join(
-        docs.select(F.col(id_col), F.col(multivec_col).alias("_mv")),
-        id_col,
-        "left",
+    # Spark never broadcasts the preserved side of an outer join, so the
+    # corpus is first cut to the first-pass ids (a semi join building
+    # on the broadcast ids), and that <= k-row frame is the broadcast
+    # build side of the left join
+    hits = docs.select(F.col(id_col), F.col(multivec_col).alias("_mv")).join(
+        F.broadcast(fp.select(id_col)), id_col, "left_semi"
     )
+    joined = fp.join(F.broadcast(hits), id_col, "left")
     maxsim = late_interaction_maxsim_col(F.col("_mv"), query_vecs, similarity)
     absent = F.col("_mv").isNull() | (F.size("_mv") == 0)
     combined = F.when(

@@ -28,6 +28,8 @@ from typing import Dict
 
 from pyspark.sql import DataFrame, functions as F
 
+from lucene_spark.search.parity import _topk
+
 __all__ = ["memory_index_scores"]
 
 _K1 = 1.2
@@ -61,10 +63,6 @@ def memory_index_scores(
             * tf
             / (tf + F.lit(_K1)),
         ).otherwise(F.lit(0.0))
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), score.alias("s"))
-        .filter(F.col("s") > 0)
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
+    return _topk(
+        docs.select(F.col(id_col).alias("doc_id"), score.alias("s")).filter(F.col("s") > 0), k
     )

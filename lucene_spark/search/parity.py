@@ -1,44 +1,100 @@
-"""SQL-parity BM25 retrieval: engine structure, float64 oracle-matching math.
+"""SQL-parity BM25 retrieval: the searcher's plan, float64 oracle-matching math.
 
 The driver's correctness gate compares each Spark query against an
 ANSI-SQL DuckDB oracle by value hash. Lucene's float32 scoring cannot
-be reproduced bit-exactly in ANSI SQL, so gate queries run the *same
-engine machinery* (analyzer → posting blocks → decode → stats) but
-score in float64 with a formula that plain SQL reproduces exactly:
+be reproduced bit-exactly in ANSI SQL, so the gate's term queries run
+on :class:`IndexSearcher`'s own exhaustive plan (block selection,
+decode+score kernel, clause combine, liveDocs) with float64 weights in
+place of the float32 ones:
 
     dl_q   = byte4ToInt(intToByte4(dl))          -- the lossy norm round-trip
     idf    = ln(1 + (N - df + 0.5) / (df + 0.5))
-    norm_f = k1 * (1 - b + b * dl_q / (sttf / N))
-    score  = Σ_terms boost * idf * freq / (freq + norm_f), rounded to 4dp
+    w      = boost * idf
+    ni     = 1 / (k1 * ((1 - b) + b * dl_q / (sttf / N)))
+    score  = Σ_terms w - w / (1 + freq * ni), rounded to 4dp
 
-(`freq/(freq+norm)` is Lucene's score before the monotonicity rewrite —
-algebraically identical, and in float64 the 1e-16 evaluation-order
-noise is absorbed by the rounding.) The float32-exact path
-(`IndexSearcher`) is verified separately by pytest goldens and the
-naive-reference differential tests.
+The oracle SQL sums ``w * freq / (freq + 1 / ni)``: algebraically
+identical, and in float64 the ~1e-16 evaluation-order noise is
+absorbed by the rounding. Only the weights' dtype separates this path
+from the served float32 one (``_score_postings``), which the pytest
+goldens and naive-reference differential tests check bit for bit.
 
 :func:`oracle_bm25_sql` emits the matching DuckDB SQL so the Spark and
 oracle sides are generated from one parameter set and cannot drift.
+Phrase, synonym, combined-field and rescore parity score phrase or
+summed freqs, not per-term postings, so they keep column expressions
+over the :func:`_dlq_col` lookup.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Dict, Optional
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from lucene_spark.functions.smallfloat import byte4_to_int
 from lucene_spark.index.builder import InvertedIndex
 from lucene_spark.index.postings import read_postings
-from lucene_spark.search.searcher import IndexSearcher, _decode_score_udf  # noqa: F401
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import types as T
+from lucene_spark.search.query import BooleanClause, BooleanQuery, BoostQuery, Occur, TermQuery
+from lucene_spark.search.searcher import IndexSearcher, _dismax
 
 __all__ = ["bm25_topk_f64", "oracle_bm25_sql"]
 
 K1, B = 1.2, 0.75
+
+# norm byte → quantized decoded length (exact ints; LENGTH_TABLE is float32)
+_DLQ = byte4_to_int(np.arange(256, dtype=np.int64))
+
+
+def _dlq_col(spark):
+    """256-row broadcast: norm byte → quantized decoded length."""
+    return F.broadcast(
+        spark.createDataFrame([(i, int(d)) for i, d in enumerate(_DLQ)], "norm int, dl_q int")
+    )
+
+
+def _f64_idf(df: int, n: int) -> float:
+    return math.log(1 + (n - df + 0.5) / (df + 0.5))
+
+
+def _f64_weights(ctx, term_boosts: Dict[str, float], df: Optional[int] = None):
+    """term → (float64 boost·idf, float64[256] normInverse) for the
+    indexed terms of ``term_boosts``: the searcher's weights at float64.
+    ``df`` replaces every term's doc_freq (blended statistics)."""
+    n = ctx.doc_count
+    avgdl = float(ctx.sum_total_term_freq) / float(n)
+    ni = 1.0 / (ctx.k1 * ((1.0 - ctx.b) + ctx.b * _DLQ / avgdl))
+    return {
+        t: (float(b) * _f64_idf(ctx.term_stats[t][0] if df is None else df, n), ni)
+        for t, b in term_boosts.items()
+        if t in ctx.term_stats
+    }
+
+
+def _f64_terms_plan(index: InvertedIndex, term_boosts: Dict[str, float], blend: bool = False):
+    """(searcher, exhaustive plan of every block of the indexed terms,
+    float64 weights). ``blend`` scores each term with the set's max
+    doc_freq (BlendedTermQuery's adjustFrequencies)."""
+    searcher = IndexSearcher(index)
+    ctx = searcher._bind_terms(list(term_boosts))
+    plan = searcher._terms_plan(ctx, term_boosts)
+    df = max((d for d, _ in ctx.term_stats.values()), default=None) if blend else None
+    plan.weights = _f64_weights(ctx, term_boosts, df)
+    return searcher, plan
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top k of a (doc_id, s) frame: ordered by the raw double (as the
+    oracle's ORDER BY s), then rounded to 4 dp as ``score``."""
+    return (
+        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
+        .limit(k)
+        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
+    )
 
 
 def _bm25_scored_f64(
@@ -50,71 +106,33 @@ def _bm25_scored_f64(
     filter_terms: Optional[list] = None,
     posts: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """All matching docs with the RAW float64 score column ``s``
+    """All live matching docs with the RAW float64 score column ``s``
     (un-rounded, un-ordered). Shared by :func:`bm25_topk_f64` and
     :func:`search_after_f64` — paging must compare raw scores
     (`search/IndexSearcher.java:576-588` compares exact scores), so the
     4-dp display rounding only happens in the final top-k select.
+
+    The flat boolean the searcher plans: a SHOULD clause per scored
+    term, FILTER per must/filter term (this path does not score them),
+    MUST_NOT per excluded term, and msm at least 1 (a doc needs a
+    scored match). ``posts`` is a pre-decoded (doc_id, term, freq,
+    norm) frame of the query's terms that replaces the block decode —
+    the :class:`DirectPostingsCache` seam.
     """
-    spark = index.spark
-    all_terms = sorted(
-        set(term_boosts) | set(must_terms or []) | set(must_not_terms or []) | set(filter_terms or [])
-    )
-    # `posts` seam: a pre-decoded (doc_id, term, freq, norm) frame —
-    # the DirectPostingsFormat cache path injects its in-memory copy
-    if posts is None:
-        posts = read_postings(index, all_terms)
-
-    # 256-row broadcast: norm byte → quantized decoded length
-    dlq = spark.createDataFrame(
-        [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
-        "norm int, dl_q int",
-    )
-    # per-term stats (exact ints from the index) + boosts
-    stats = {
-        r["term"]: int(r["doc_freq"])
-        for r in index.terms.filter(F.col("term").isin(all_terms)).collect()
-    }
-    scored_terms = [t for t in term_boosts if t in stats]
-    n, sttf = index.doc_count, index.sum_total_term_freq
-    tb = spark.createDataFrame(
-        [(t, float(term_boosts[t]), stats[t]) for t in scored_terms]
-        or [("", 0.0, 0)],
-        "term string, boost double, doc_freq long",
-    )
-    avgdl = F.lit(float(sttf)) / F.lit(float(n))
-    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("doc_freq") + F.lit(0.5)) / (F.col("doc_freq") + F.lit(0.5)))
-    norm_f = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_q") / avgdl)
-    per_term = F.col("boost") * idf * F.col("freq") / (F.col("freq") + norm_f)
-
-    scored = (
-        posts.filter(F.col("term").isin(scored_terms) if scored_terms else F.lit(False))
-        .join(F.broadcast(dlq), "norm")
-        .join(F.broadcast(tb), "term")
-        .withColumn("s", per_term)
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("s"), F.count(F.lit(1)).alias("nmatch"))
-    )
-    if min_should_match > 0:
-        scored = scored.filter(F.col("nmatch") >= min_should_match)
-    for t in must_terms or []:
-        scored = scored.join(
-            posts.filter(F.col("term") == t).select("doc_id").distinct(), "doc_id", "semi"
-        )
-    for t in filter_terms or []:
-        scored = scored.join(
-            posts.filter(F.col("term") == t).select("doc_id").distinct(), "doc_id", "semi"
-        )
-    for t in must_not_terms or []:
-        scored = scored.join(
-            posts.filter(F.col("term") == t).select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-    # liveDocs: tombstoned docs leave results but (like Lucene) stats
-    # above still count them until apply_deletes reclaims the segments
-    hidden = index.hidden_docs
-    if hidden is not None:
-        scored = scored.join(hidden, "doc_id", "left_anti")
-    return scored.select("doc_id", "s")
+    clauses = [BooleanClause(BoostQuery(TermQuery(t), b)) for t, b in term_boosts.items()]
+    clauses += [
+        BooleanClause(TermQuery(t), Occur.FILTER)
+        for t in [*(must_terms or []), *(filter_terms or [])]
+    ]
+    clauses += [BooleanClause(TermQuery(t), Occur.MUST_NOT) for t in must_not_terms or []]
+    q = BooleanQuery(tuple(clauses), max(min_should_match, 1))
+    searcher = IndexSearcher(index)
+    ctx = searcher._bind(q)
+    plan = searcher._plan(q, ctx, k=0, mode="exhaustive")
+    if plan is None:  # no scored term
+        return index.spark.createDataFrame([], "doc_id long, s double")
+    plan.weights = _f64_weights(ctx, {t: term_boosts.get(t, 1.0) for t in plan.weights})
+    return searcher._live(searcher._frame(plan, posts)).withColumnRenamed("score", "s")
 
 
 def bm25_topk_f64(
@@ -141,12 +159,7 @@ def bm25_topk_f64(
         filter_terms=filter_terms,
         posts=posts,
     )
-    # order by the raw double (matching the oracle's ORDER BY s), round after
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    return _topk(scored, k)
 
 
 # --- pluggable-similarity scoring ------------------------------------------
@@ -171,10 +184,6 @@ def similarity_topk_f64(
     spark = index.spark
     terms = sorted(set(term_boosts))
     posts = read_postings(index, terms)
-    dlq = spark.createDataFrame(
-        [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
-        "norm int, dl_q int",
-    )
     stats = {
         r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
         for r in index.terms.filter(F.col("term").isin(terms)).collect()
@@ -200,15 +209,13 @@ def similarity_topk_f64(
     }
     scored = (
         posts.filter(F.col("term").isin(present) if present else F.lit(False))
-        .join(F.broadcast(dlq), "norm")
+        .join(_dlq_col(spark), "norm")
         .join(F.broadcast(tb), "term")
         .withColumn("s", similarity.score_col(cols))
         .groupBy("doc_id")
         .agg(F.sum("s").alias("s"))
     )
-    hidden = index.hidden_docs
-    if hidden is not None:
-        scored = scored.join(hidden, "doc_id", "left_anti")
+    scored = IndexSearcher(index)._live(scored)
     score = F.round(F.col("s"), 4) if round_score else F.col("s")
     return (
         scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
@@ -332,25 +339,10 @@ ORDER BY s DESC, doc_id ASC LIMIT {k}
 
 # --- phrase / synonym / dismax / searchAfter parity paths -------------------
 #
-# Same design as bm25_topk_f64: run the REAL engine machinery (posting
-# blocks, positional decode, stats) but score in float64 with a
-# SQL-reproducible formula, so the DuckDB oracle can hash-match values.
-
-
-def _dlq_col(spark, index: InvertedIndex):
-    """256-row broadcast: norm byte → quantized decoded length."""
-    return F.broadcast(
-        spark.createDataFrame(
-            [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
-            "norm int, dl_q int",
-        )
-    )
-
-
-def _f64_idf(df: int, n: int) -> float:
-    import math
-
-    return math.log(1 + (n - df + 0.5) / (df + 0.5))
+# DisMax and searchAfter run the searcher's plan like bm25_topk_f64.
+# Phrase and synonym score per-doc freqs (phrase occurrences, summed
+# synonym freqs) from the engine's positional decode or postings with
+# the same float64 formula as a column expression.
 
 
 def _f64_score_col(weight: float, n: int, sttf: int):
@@ -377,13 +369,9 @@ def phrase_bm25_f64(index: InvertedIndex, phrase: list, k: int = 10) -> DataFram
         return spark.createDataFrame([], "doc_id long, score double")
     n, sttf = index.doc_count, index.sum_total_term_freq
     weight = sum(_f64_idf(stats[t], n) for t in dict.fromkeys(phrase))
-    freqs = phrase_freqs(index, phrase).join(_dlq_col(spark, index), "norm")
+    freqs = phrase_freqs(index, phrase).join(_dlq_col(spark), "norm")
     scored = freqs.withColumn("s", _f64_score_col(weight, n, sttf))
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    return _topk(IndexSearcher(index)._live(scored), k)
 
 
 def oracle_phrase_sql(phrase: list, k: int = 10, table: str = "documents") -> str:
@@ -437,14 +425,10 @@ def synonym_bm25_f64(index: InvertedIndex, terms: list, k: int = 10) -> DataFram
     freqs = (
         posts.groupBy("doc_id")
         .agg(F.sum("freq").alias("freq"), F.max("norm").alias("norm"))
-        .join(_dlq_col(spark, index), "norm")
+        .join(_dlq_col(spark), "norm")
     )
     scored = freqs.withColumn("s", _f64_score_col(weight, n, sttf))
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    return _topk(IndexSearcher(index)._live(scored), k)
 
 
 def oracle_synonym_sql(terms: list, k: int = 10, table: str = "documents") -> str:
@@ -483,36 +467,9 @@ def dismax_f64(
     index: InvertedIndex, term_boosts: Dict[str, float], tie: float = 0.0, k: int = 10
 ) -> DataFrame:
     """DisjunctionMax parity: max + tie * (sum - max) in float64."""
-    spark = index.spark
-    stats = {
-        r["term"]: int(r["doc_freq"])
-        for r in index.terms.filter(F.col("term").isin(list(term_boosts))).collect()
-    }
-    if not stats:
-        return spark.createDataFrame([], "doc_id long, score double")
-    n, sttf = index.doc_count, index.sum_total_term_freq
-    posts = read_postings(index, list(stats)).join(_dlq_col(spark, index), "norm")
-    weight_map = F.create_map(
-        *[
-            F.lit(x)
-            for t in stats
-            for x in (t, float(term_boosts[t]) * _f64_idf(stats[t], n))
-        ]
-    )
-    avgdl = float(sttf) / float(n)
-    norm_f = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_q") / F.lit(avgdl))
-    per_term = weight_map[F.col("term")] * F.col("freq") / (F.col("freq") + norm_f)
-    scored = (
-        posts.withColumn("ts", per_term)
-        .groupBy("doc_id")
-        .agg(F.max("ts").alias("mx"), F.sum("ts").alias("sm"))
-        .withColumn("s", F.col("mx") + (F.col("sm") - F.col("mx")) * F.lit(float(tie)))
-    )
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    searcher, plan = _f64_terms_plan(index, term_boosts)
+    scored = searcher._live(_dismax(searcher._decoded(plan), tie))
+    return _topk(scored.withColumnRenamed("score", "s"), k)
 
 
 def oracle_dismax_sql(
@@ -679,9 +636,7 @@ def combined_field_f64(
       freq(doc) = Σ_f w_f · freq_f(doc)
       norm(doc) = quantize(round(Σ_f w_f · decodedLen_f(doc)))
     """
-    import numpy as np
-
-    from lucene_spark.functions.smallfloat import byte4_to_int, int_to_byte4
+    from lucene_spark.functions.smallfloat import int_to_byte4
 
     spark = index.spark
     n = index.doc_count
@@ -746,11 +701,7 @@ def combined_field_f64(
             + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_q") / F.lit(avgdl))
         ),
     )
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    return _topk(IndexSearcher(index)._live(scored), k)
 
 
 def oracle_combined_field_sql(
@@ -938,9 +889,9 @@ def blended_fuzzy_f64(
     maximum across the set, summed per doc (SHOULD semantics). The
     constant-score gates cover the match set; this covers ranking.
     """
+    from lucene_spark.search.blended import blended_term_topk
     from lucene_spark.search.query import FuzzyQuery
 
-    spark = index.spark
     exp = (
         index.terms.filter(FuzzyQuery(term, max_edits).term_filter())
         .select("term", "doc_freq")
@@ -948,23 +899,7 @@ def blended_fuzzy_f64(
         .limit(max_expansions)
         .collect()
     )
-    if not exp:
-        return spark.createDataFrame([], "doc_id long, score double")
-    terms = [r["term"] for r in exp]
-    bdf = max(int(r["doc_freq"]) for r in exp)
-    n, sttf = index.doc_count, index.sum_total_term_freq
-    weight = _f64_idf(bdf, n)
-    posts = read_postings(index, terms).join(_dlq_col(spark, index), "norm")
-    scored = (
-        posts.withColumn("s", _f64_score_col(weight, n, sttf))
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("s"))
-    )
-    return (
-        scored.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", F.round(F.col("s"), 4).alias("score"))
-    )
+    return blended_term_topk(index, {r["term"]: 1.0 for r in exp}, k=k, rewrite="boolean")
 
 
 def oracle_blended_fuzzy_sql(

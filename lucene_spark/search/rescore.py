@@ -87,7 +87,7 @@ def rescore_phrase_topk(
             second = (
                 phrase_freqs(index, phrase, doc_range=(bounds["lo"], bounds["hi"]))
                 .join(F.broadcast(win.select("doc_id")), "doc_id")
-                .join(_dlq_col(spark, index), "norm")
+                .join(_dlq_col(spark), "norm")
                 .withColumn("ps", _f64_score_col(p_weight, n, sttf))
                 .select("doc_id", "ps")
             )

@@ -80,7 +80,6 @@ from lucene_spark.search.query import (
     MatchAllDocsQuery,
     MatchNoDocsQuery,
     MultiTermFilterDocsQuery,
-    MultiTermQuery,
     Occur,
     PhraseQuery,
     Query,
@@ -113,48 +112,63 @@ _TOPK_SCHEMA = T.StructType(
 _BLOCK_COLS = ("term", "docs_packed", "freqs_packed", "norms_raw")
 
 
-def _decode_score(batch, weights):
-    """Decode + float32-score one batch of posting blocks (``batch[c]``
-    for c in ``_BLOCK_COLS``).
+def _term_codes(terms, names) -> np.ndarray:
+    """Index into ``names`` of each term."""
+    code_of = {t: i for i, t in enumerate(names)}
+    return np.fromiter((code_of[t] for t in terms), np.intp, len(terms))
 
-    The one scoring kernel of both routes. Decode is the shared
-    posting-block kernel; the BM25 arithmetic runs once over the batch
-    with per-posting weight and normInverse gathers, the same float32
-    ops as ``w - w / (1 + freq * cache[norm])`` on each block alone.
 
-    weights: term → (float32 weight, float32[256] normInverse cache).
-    Returns (doc_id int64, index into ``list(weights)`` per posting,
-    float32 score).
+def _score_postings(term_of, freq, norm, weights) -> np.ndarray:
+    """BM25 score of decoded postings: ``w - w / (1 + freq * cache[norm])``
+    with per-posting weight and normInverse gathers.
+
+    The arithmetic dtype is the weights' dtype: float32 weights run
+    Lucene's float32 ops (the served scores), float64 weights the same
+    lines in float64 (the oracle-matching scores).
     """
     names = list(weights)
+    ni = np.stack([weights[t][1] for t in names])[term_of, norm]
+    dt = ni.dtype.type
+    w = np.array([weights[t][0] for t in names], dtype=ni.dtype)[term_of]
+    return w - w / (dt(1.0) + freq.astype(ni.dtype) * ni)
+
+
+def _decode_score(batch, weights):
+    """Decode + score one batch of posting blocks (``batch[c]`` for c
+    in ``_BLOCK_COLS``).
+
+    The one scoring kernel of both routes: the shared posting-block
+    decode, then :func:`_score_postings` once over the batch — the same
+    ops as scoring each block alone.
+
+    weights: term → (weight, normInverse[256]), float32 or float64.
+    Returns (doc_id int64, index into ``list(weights)`` per posting,
+    score).
+    """
     if len(batch["term"]) == 0:
-        return (
-            np.empty(0, np.int64),
-            np.empty(0, np.intp),
-            np.empty(0, np.float32),
-        )
-    code_of = {t: i for i, t in enumerate(names)}
+        return np.empty(0, np.int64), np.empty(0, np.intp), np.empty(0, np.float32)
     p = decode_blocks(batch)
-    term_of = np.repeat(
-        np.fromiter((code_of[t] for t in batch["term"]), np.intp, len(p.lens)), p.lens
-    )
-    freqs = p.freq.astype(np.float32)
-    w = np.array([weights[t][0] for t in names], dtype=np.float32)[term_of]
-    ni = np.stack([weights[t][1] for t in names])[term_of, p.norm]
-    score = w - w / (np.float32(1.0) + freqs * ni)
-    return p.doc_id, term_of, score
+    term_of = np.repeat(_term_codes(batch["term"], list(weights)), p.lens)
+    return p.doc_id, term_of, _score_postings(term_of, p.freq, p.norm, weights)
 
 
 def _decode_score_udf(weights: Dict[str, Tuple[float, np.ndarray]]):
-    """mapInPandas kernel: block rows → (doc_id, term, float32 score),
-    one output frame per Arrow batch (:func:`_decode_score`)."""
+    """mapInPandas kernel → (doc_id, term, score), one output frame per
+    Arrow batch. Block rows are decoded and scored
+    (:func:`_decode_score`); rows already decoded to (doc_id, term,
+    freq, norm) are only scored."""
     names = np.array(list(weights), dtype=object)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            docs, term_of, score = _decode_score(pdf, weights)
+            if "docs_packed" in pdf:
+                docs, term_of, score = _decode_score(pdf, weights)
+            else:
+                docs = pdf["doc_id"].values
+                term_of = _term_codes(pdf["term"], names)
+                score = _score_postings(term_of, pdf["freq"].values, pdf["norm"].values, weights)
             yield pd.DataFrame(
                 {
                     "doc_id": docs,
@@ -164,6 +178,16 @@ def _decode_score_udf(weights: Dict[str, Tuple[float, np.ndarray]]):
             )
 
     return fn
+
+
+def _dismax(scored: DataFrame, tie: float) -> DataFrame:
+    """Per doc, ``max + tie * (sum - max)`` of its (doc_id, score) rows
+    (`search/DisjunctionMaxScorer.java:60-72`)."""
+    agg = scored.groupBy("doc_id").agg(F.max("score").alias("_mx"), F.sum("score").alias("_sm"))
+    return agg.select(
+        "doc_id",
+        (F.col("_mx") + (F.col("_sm") - F.col("_mx")) * F.lit(float(tie))).alias("score"),
+    )
 
 
 def _sum_by_doc(docs: np.ndarray, score: np.ndarray):
@@ -391,11 +415,12 @@ class IndexSearcher:
             pa.table({"doc_id": docs[top], "score": score[top]}), _TOPK_SCHEMA
         )
 
-    def _frame(self, plan: _Plan) -> DataFrame:
-        """Distributed route: the plan as a (doc_id, score double) frame."""
+    def _frame(self, plan: _Plan, posts: Optional[DataFrame] = None) -> DataFrame:
+        """Distributed route: the plan as a (doc_id, score double) frame.
+        ``posts`` (see :meth:`_decoded`) replaces the plan's blocks."""
         if plan.blocks is None:
             return self.index.spark.createDataFrame([], "doc_id long, score double")
-        scored = self._decoded(plan)
+        scored = self._decoded(plan, posts)
         if plan.groups is not None:
             return self._flat_agg(scored, plan)
         if len(plan.weights) == 1 and plan.theta is None:
@@ -625,13 +650,18 @@ class IndexSearcher:
     def _term_blocks(self, terms: List[str]) -> DataFrame:
         return self.index.blocks.filter(F.col("term").isin(terms))
 
-    def _decoded(self, plan: _Plan) -> DataFrame:
-        """(doc_id, term, score) of every posting of the plan's blocks."""
+    def _decoded(self, plan: _Plan, posts: Optional[DataFrame] = None) -> DataFrame:
+        """(doc_id, term, score) of every posting of the plan's blocks,
+        or of ``posts``, the same terms' postings already decoded to
+        (doc_id, term, freq, norm) rows."""
         if plan.blocks is None:
             return self.index.spark.createDataFrame([], _SCORED_SCHEMA)
-        return plan.blocks.select(*_BLOCK_COLS).mapInPandas(
-            _decode_score_udf(plan.weights), _SCORED_SCHEMA
-        )
+        if posts is None:
+            src = plan.blocks.select(*_BLOCK_COLS)
+        else:
+            src = posts.filter(F.col("term").isin(list(plan.weights)))
+            src = src.select("doc_id", "term", "freq", "norm")
+        return src.mapInPandas(_decode_score_udf(plan.weights), _SCORED_SCHEMA)
 
     def _matching_docs(self, q: Query, ctx: _Ctx) -> DataFrame:
         """Unscored match set (FILTER / MUST_NOT / ConstantScore path)."""
@@ -760,22 +790,11 @@ class IndexSearcher:
                 b=self.b,
             ).select("doc_id", F.col("score").cast("double").alias("score"))
         if isinstance(q, DisjunctionMaxQuery):
-            # max + tie * (sum - max) over sub scores
-            # (`search/DisjunctionMaxScorer.java:60-72`)
             union = None
             for sub in q.queries:
                 d = self._eval(sub, ctx, boost)
                 union = d if union is None else union.unionByName(d)
-            agg = union.groupBy("doc_id").agg(
-                F.max("score").alias("_mx"), F.sum("score").alias("_sm")
-            )
-            return agg.select(
-                "doc_id",
-                (
-                    F.col("_mx")
-                    + (F.col("_sm") - F.col("_mx")) * F.lit(float(q.tie_breaker))
-                ).alias("score"),
-            )
+            return _dismax(union, q.tie_breaker)
         if isinstance(q, BooleanQuery):
             return self._eval_boolean(q, ctx, boost)
         raise NotImplementedError(f"eval: {type(q).__name__}")

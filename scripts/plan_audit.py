@@ -9,7 +9,8 @@ checks the properties that matter at 100 TB:
   (ReadSchema) — the FST-seek analog;
 - top-k is TakeOrderedAndProject (bounded heap per partition + merge),
   never a global sort;
-- small-side joins broadcast (dlq/stats lookup tables);
+- the BM25 parity scorer runs the searcher's plan: one decode+score
+  pass and no lookup-table join;
 - scan→filter→project pipelines run inside WholeStageCodegen;
 - the WAND prune filter is JVM-side (no BatchEvalPython/ArrowEvalPython
   in the block-metadata pass).
@@ -87,8 +88,11 @@ def main() -> None:
         )
     )
 
-    # 2. top-k plan = TakeOrderedAndProject
+    # 2. top-k plan = TakeOrderedAndProject on the distributed route (a
+    # small term query otherwise takes the local route, whose hits come
+    # back as a LocalTableScan with no Spark top-k to audit)
     searcher = IndexSearcher(idx)
+    searcher._LOCAL_MAX_POSTINGS = 0
     topk = searcher.search(TermQuery("spark"), 10, "exhaustive")
     p2 = plan_of(topk)
     checks.append(
@@ -100,15 +104,18 @@ def main() -> None:
         )
     )
 
-    # 3. broadcast of small lookup tables in the parity scorer
+    # 3. the parity scorer is the searcher's plan: one Arrow decode+score
+    # pass over the term's blocks, JVM combine, no lookup-table joins
     from lucene_spark.search.parity import bm25_topk_f64
 
     p3 = plan_of(bm25_topk_f64(idx, {"spark": 1.0}, k=10))
+    n_py3 = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|BatchEvalPython|MapInPandas)", p3))
+    n_join3 = len(re.findall(r"\(\d+\) \w*Join", p3))
     checks.append(
         (
-            "small dims broadcast (dlq/boost tables)",
-            "BroadcastHashJoin" in p3 or "BroadcastExchange" in p3,
-            "BroadcastHashJoin in BM25 parity plan",
+            "BM25 parity: one decode+score pass, no join",
+            n_py3 == 1 and n_join3 == 0,
+            f"{n_py3} Python node(s), want exactly 1; {n_join3} join(s)",
             p3,
         )
     )

@@ -96,6 +96,19 @@ def test_pure_jvm_plan(spark, docs):
         .toString()
     )
     assert "Python" not in plan and "Arrow" not in plan
+    # the rescore joins build on the k-bounded side even with
+    # size-based broadcasting off: the hint alone decides
+    fp = spark.createDataFrame([(0, 9.0), (3, 7.0)], "doc_id long, score double")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        rescored = late_interaction_rescore(fp, docs, Q, k=5)
+        plan = rescored._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastHashJoin") == 2 and "SortMergeJoin" not in plan
+        assert {r["doc_id"] for r in rescored.collect()} == {0, 3}
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_bad_similarity(spark, docs):

@@ -1,11 +1,12 @@
 """The shared posting-block decoder (`lucene_spark.index.postings`):
-encode → decode round trips, the doc-range skip and trim of
-``read_postings``, and a guard that keeps block decoding in one
-module. The re-encoders' CheckIndex checks ride on their existing tests
+encode → decode round trips, the searcher's decode+score kernel at
+both weight dtypes, the doc-range skip and trim of ``read_postings``,
+and a guard that keeps block decoding in one module. The re-encoders' CheckIndex checks ride on their existing tests
 (test_index_build, test_bpmerge, test_payloads)."""
 
 import ast
 import dataclasses
+import math
 import pathlib
 
 import numpy as np
@@ -14,9 +15,13 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from lucene_spark.functions.bm25 import BM25
+from lucene_spark.functions.smallfloat import byte4_to_int
 from lucene_spark.index import InvertedIndex
 from lucene_spark.index.builder import BLOCKS_SCHEMA_PAY, NORMS_TERM, _encode_term_group
 from lucene_spark.index.postings import decode_blocks, read_postings
+from lucene_spark.search.parity import _f64_weights
+from lucene_spark.search.searcher import _Ctx, _decode_score
 
 # --- kernel round trip (pure numpy) -----------------------------------------
 
@@ -115,10 +120,9 @@ def test_decode_blocks_only_decodes_present_columns():
 # --- Spark operator over one small block frame --------------------------------
 
 
-@pytest.fixture(scope="module")
-def pay_index(spark):
-    """Three terms over 300 docs (3 blocks each), positions + payloads:
-    blocks encoded by the build's own kernel, no build job needed."""
+def _three_term_blocks() -> pd.DataFrame:
+    """Three terms over 300 docs (3 blocks each), positions + payloads,
+    encoded by the build's own kernel."""
     rng = np.random.RandomState(7)
     groups = []
     for t in ("alpha", "beta", "gamma"):
@@ -126,7 +130,43 @@ def pay_index(spark):
         pos = [np.cumsum(rng.randint(1, 5, size=rng.randint(1, 4))) for _ in docs]
         pay = [list(rng.randint(1, 9, size=len(p)) / 4) for p in pos]
         groups.append(_group(t, docs, [len(p) for p in pos], rng.randint(0, 256, 290), pos, pay)[1])
-    blocks = spark.createDataFrame(pd.concat(groups, ignore_index=True), BLOCKS_SCHEMA_PAY)
+    return pd.concat(groups, ignore_index=True)
+
+
+def test_decode_score_kernel_dtypes():
+    """The searcher's kernel on float32 weights is Lucene's BM25 bit for
+    bit; on float64 weights it is the parity formula at 4 dp."""
+    blocks = _three_term_blocks()
+    p = decode_blocks(blocks)
+    term = np.repeat(blocks["term"].values, p.lens)
+    n, sttf = 300, 2000
+    stats = {"alpha": 290, "beta": 41, "gamma": 3}
+    boosts = {"alpha": 1.0, "beta": 0.5, "gamma": 2.5}
+    bm = {t: BM25(stats[t], n, sttf, boost=b) for t, b in boosts.items()}
+    names = list(bm)
+
+    docs, term_of, f32 = _decode_score(blocks, {t: (s.weight, s.cache) for t, s in bm.items()})
+    assert f32.dtype == np.float32 and docs.tolist() == p.doc_id.tolist()
+    assert (np.array(names)[term_of] == term).all()
+    for t in names:
+        want = bm[t].score(p.freq[term == t], p.norm[term == t])
+        assert f32[term == t].tobytes() == want.tobytes()
+
+    ctx = _Ctx(n, sttf, {t: (d, 0) for t, d in stats.items()}, k1=1.2, b=0.75)
+    _, _, f64 = _decode_score(blocks, _f64_weights(ctx, boosts))
+    assert f64.dtype == np.float64
+    idf = np.array([math.log(1 + (n - stats[t] + 0.5) / (stats[t] + 0.5)) for t in names])
+    w = np.array([boosts[t] for t in names])[term_of] * idf[term_of]
+    dl_q = byte4_to_int(p.norm.astype(np.int64))
+    freq = p.freq.astype(np.float64)
+    want = w * freq / (freq + 1.2 * (1 - 0.75 + 0.75 * dl_q / (sttf / n)))
+    assert np.round(f64, 4).tolist() == np.round(want, 4).tolist()
+
+
+@pytest.fixture(scope="module")
+def pay_index(spark):
+    """:func:`_three_term_blocks` as an index, no build job needed."""
+    blocks = spark.createDataFrame(_three_term_blocks(), BLOCKS_SCHEMA_PAY)
     return InvertedIndex(
         spark=spark, blocks=blocks, terms=None, norms=None, doc_count=300,
         sum_total_term_freq=0, docs_per_segment=300, num_segments=1, metrics={},

@@ -4,6 +4,8 @@ revive, and retention-gated hardening
 `index/SoftDeletesDirectoryReaderWrapper.java`)."""
 
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from lucene_spark.index import (
     InvertedIndex,
@@ -15,6 +17,7 @@ from lucene_spark.index import (
     undelete,
 )
 from lucene_spark.search import IndexSearcher, TermQuery
+from lucene_spark.search import parity
 
 
 def _index(spark):
@@ -131,3 +134,38 @@ def test_hard_and_soft_sets_stay_disjoint(spark):
     assert 2 not in {
         r["doc_id"] for r in (reclaimed.soft_deletes or reclaimed.norms.limit(0)).collect()
     }
+
+
+@pytest.fixture(scope="module")
+def pos_index(spark):
+    """12 docs, positions on: every parity query below matches docs 0-3
+    and some of docs 4-11."""
+    texts = ["hash join fast", "hash join slow", "hash joins", "hash join scan"] * 3
+    return InvertedIndex.build(
+        spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string"),
+        analyzer="simple",
+        positions=True,
+        docs_per_segment=4,
+    )
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        lambda i: parity.dismax_f64(i, {"hash": 1.0, "join": 0.5}, tie=0.1, k=20),
+        lambda i: parity.synonym_bm25_f64(i, ["join", "joins"], k=20),
+        lambda i: parity.blended_fuzzy_f64(i, "join", k=20),
+        lambda i: parity.phrase_bm25_f64(i, ["hash", "join"], k=20),
+        lambda i: parity.combined_field_f64(
+            i, i.spark.range(12).select(F.col("id").alias("doc_id"), F.lit("kw").alias("source")), "hash", k=20
+        ),
+    ],
+    ids=["dismax", "synonym", "blended_fuzzy", "phrase", "combined_field"],
+)
+def test_parity_paths_hide_soft_deleted(pos_index, query):
+    full = [(r["doc_id"], r["score"]) for r in query(pos_index).collect()]
+    assert {0, 1, 2, 3} & {d for d, _ in full}
+    soft = soft_delete_by_ids(pos_index, [0, 1, 2, 3])
+    # hidden docs leave the results; stats (and so scores) stay put
+    got = [(r["doc_id"], r["score"]) for r in query(soft).collect()]
+    assert got == [(d, s) for d, s in full if d > 3]
