@@ -2712,17 +2712,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     def doc_norms(spark, sf):
-        from lucene_spark.functions.smallfloat import byte4_to_int
-        import numpy as np
+        from lucene_spark.search.parity import _dlq_col
 
-        idx = _index(spark, sf)
-        dlq = spark.createDataFrame(
-            [(int(i), int(byte4_to_int(np.int64(i)))) for i in range(256)],
-            "norm int, dl_q int",
-        )
         return (
-            idx.norms.filter(F.col("doc_id") < 200)
-            .join(F.broadcast(dlq), "norm")
+            _index(spark, sf)
+            .norms.filter(F.col("doc_id") < 200)
+            .join(_dlq_col(spark), "norm")
             .select("doc_id", "dl", F.col("norm").alias("norm_byte"), "dl_q")
         )
 

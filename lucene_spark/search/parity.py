@@ -21,26 +21,29 @@ goldens and naive-reference differential tests check bit for bit.
 
 :func:`oracle_bm25_sql` emits the matching DuckDB SQL so the Spark and
 oracle sides are generated from one parameter set and cannot drift.
-Phrase, synonym, combined-field and rescore parity score phrase or
-summed freqs, not per-term postings, so they keep column expressions
-over the :func:`_dlq_col` lookup.
+Phrase, synonym, combined-field and rescore parity score one freq per
+doc (phrase occurrences, summed or field-weighted freqs) from a freq
+producer, as a pseudo-term through the same kernel: only their float64
+weights (:func:`_f64_weight`) differ. Pluggable similarities keep
+column expressions over the :func:`_dlq_col` lookup.
 """
 
 from __future__ import annotations
 
 import math
+from functools import partial
 from typing import Dict, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from lucene_spark.functions.smallfloat import byte4_to_int
+from lucene_spark.functions.smallfloat import byte4_to_int, int_to_byte4
 from lucene_spark.index.builder import InvertedIndex
 from lucene_spark.index.postings import read_postings
 from lucene_spark.search.query import BooleanClause, BooleanQuery, BoostQuery, Occur, TermQuery
-from lucene_spark.search.searcher import IndexSearcher, _dismax
+from lucene_spark.search.positional import _synonym_plan
+from lucene_spark.search.searcher import IndexSearcher, _dismax, _freq_plan
 
 __all__ = ["bm25_topk_f64", "oracle_bm25_sql"]
 
@@ -61,15 +64,22 @@ def _f64_idf(df: int, n: int) -> float:
     return math.log(1 + (n - df + 0.5) / (df + 0.5))
 
 
-def _f64_weights(ctx, term_boosts: Dict[str, float], df: Optional[int] = None):
-    """term → (float64 boost·idf, float64[256] normInverse) for the
-    indexed terms of ``term_boosts``: the searcher's weights at float64.
-    ``df`` replaces every term's doc_freq (blended statistics)."""
+def _f64_weight(ctx, dfs, boost: float = 1.0, dlq=_DLQ, sttf: Optional[float] = None):
+    """Float64 (boost·Σ idf(df) over ``dfs``, normInverse[256]): the
+    float32 :meth:`_Ctx.weight` at float64. ``dlq`` (norm byte →
+    length) and ``sttf`` (total length) replace the index's for a
+    pseudo-field."""
     n = ctx.doc_count
-    avgdl = float(ctx.sum_total_term_freq) / float(n)
-    ni = 1.0 / (ctx.k1 * ((1.0 - ctx.b) + ctx.b * _DLQ / avgdl))
+    avgdl = float(ctx.sum_total_term_freq if sttf is None else sttf) / float(n)
+    ni = 1.0 / (ctx.k1 * ((1.0 - ctx.b) + ctx.b * dlq / avgdl))
+    return float(boost) * sum(_f64_idf(df, n) for df in dfs), ni
+
+
+def _f64_weights(ctx, term_boosts: Dict[str, float], df: Optional[int] = None):
+    """term → float64 weight for the indexed terms of ``term_boosts``.
+    ``df`` replaces every term's doc_freq (blended statistics)."""
     return {
-        t: (float(b) * _f64_idf(ctx.term_stats[t][0] if df is None else df, n), ni)
+        t: _f64_weight(ctx, [ctx.term_stats[t][0] if df is None else df], b)
         for t, b in term_boosts.items()
         if t in ctx.term_stats
     }
@@ -95,6 +105,11 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
         .limit(k)
         .select("doc_id", F.round(F.col("s"), 4).alias("score"))
     )
+
+
+def _plan_topk(searcher: IndexSearcher, plan, k: int) -> DataFrame:
+    """:func:`_topk` of a float64 plan's live doc scores."""
+    return _topk(searcher._live(searcher._frame(plan)).withColumnRenamed("score", "s"), k)
 
 
 def _bm25_scored_f64(
@@ -132,7 +147,9 @@ def _bm25_scored_f64(
     if plan is None:  # no scored term
         return index.spark.createDataFrame([], "doc_id long, s double")
     plan.weights = _f64_weights(ctx, {t: term_boosts.get(t, 1.0) for t in plan.weights})
-    return searcher._live(searcher._frame(plan, posts)).withColumnRenamed("score", "s")
+    if posts is not None and plan.blocks is not None:
+        plan.blocks = posts.filter(F.col("term").isin(list(plan.weights)))
+    return searcher._live(searcher._frame(plan)).withColumnRenamed("score", "s")
 
 
 def bm25_topk_f64(
@@ -341,15 +358,7 @@ ORDER BY s DESC, doc_id ASC LIMIT {k}
 #
 # DisMax and searchAfter run the searcher's plan like bm25_topk_f64.
 # Phrase and synonym score per-doc freqs (phrase occurrences, summed
-# synonym freqs) from the engine's positional decode or postings with
-# the same float64 formula as a column expression.
-
-
-def _f64_score_col(weight: float, n: int, sttf: int):
-    """weight * freq / (freq + k1*(1-b+b*dl_q/avgdl)) as a Column."""
-    avgdl = float(sttf) / float(n)
-    norm_f = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_q") / F.lit(avgdl))
-    return F.lit(weight) * F.col("freq") / (F.col("freq") + norm_f)
+# synonym freqs) as a pseudo-term through the same kernel.
 
 
 def phrase_bm25_f64(index: InvertedIndex, phrase: list, k: int = 10) -> DataFrame:
@@ -358,20 +367,10 @@ def phrase_bm25_f64(index: InvertedIndex, phrase: list, k: int = 10) -> DataFram
     freq = exact phrase occurrences; weight = Σ_i idf(df_i) (idf summed
     over phrase terms per `BM25Similarity.java:161-170`).
     """
-    from lucene_spark.search.positional import phrase_freqs
-
-    spark = index.spark
-    stats = {
-        r["term"]: int(r["doc_freq"])
-        for r in index.terms.filter(F.col("term").isin(list(set(phrase)))).collect()
-    }
-    if any(t not in stats for t in set(phrase)):
-        return spark.createDataFrame([], "doc_id long, score double")
-    n, sttf = index.doc_count, index.sum_total_term_freq
-    weight = sum(_f64_idf(stats[t], n) for t in dict.fromkeys(phrase))
-    freqs = phrase_freqs(index, phrase).join(_dlq_col(spark), "norm")
-    scored = freqs.withColumn("s", _f64_score_col(weight, n, sttf))
-    return _topk(IndexSearcher(index)._live(scored), k)
+    searcher = IndexSearcher(index)
+    ctx = searcher._bind_terms(phrase)
+    plan = searcher._phrase_plan(ctx, phrase, weigh=partial(_f64_weight, ctx))
+    return _plan_topk(searcher, plan, k)
 
 
 def oracle_phrase_sql(phrase: list, k: int = 10, table: str = "documents") -> str:
@@ -412,23 +411,9 @@ ORDER BY s DESC, doc_id ASC LIMIT {k}
 
 def synonym_bm25_f64(index: InvertedIndex, terms: list, k: int = 10) -> DataFrame:
     """SynonymQuery parity: pseudo-term df = max, freq = Σ freqs."""
-    spark = index.spark
-    stats = {
-        r["term"]: int(r["doc_freq"])
-        for r in index.terms.filter(F.col("term").isin(terms)).collect()
-    }
-    if not stats:
-        return spark.createDataFrame([], "doc_id long, score double")
-    n, sttf = index.doc_count, index.sum_total_term_freq
-    weight = _f64_idf(max(stats.values()), n)
-    posts = read_postings(index, list(stats))
-    freqs = (
-        posts.groupBy("doc_id")
-        .agg(F.sum("freq").alias("freq"), F.max("norm").alias("norm"))
-        .join(_dlq_col(spark), "norm")
-    )
-    scored = freqs.withColumn("s", _f64_score_col(weight, n, sttf))
-    return _topk(IndexSearcher(index)._live(scored), k)
+    searcher = IndexSearcher(index)
+    ctx = searcher._bind_terms(terms)
+    return _plan_topk(searcher, _synonym_plan(index, ctx, terms, weigh=partial(_f64_weight, ctx)), k)
 
 
 def oracle_synonym_sql(terms: list, k: int = 10, table: str = "documents") -> str:
@@ -636,8 +621,6 @@ def combined_field_f64(
       freq(doc) = Σ_f w_f · freq_f(doc)
       norm(doc) = quantize(round(Σ_f w_f · decodedLen_f(doc)))
     """
-    from lucene_spark.functions.smallfloat import int_to_byte4
-
     spark = index.spark
     n = index.doc_count
     # keyword side: every doc has exactly one token in kw_col
@@ -650,25 +633,32 @@ def combined_field_f64(
         .join(index.norms.select("doc_id"), "doc_id", "semi")
         .count()
     )
-    st = {
-        r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
-        for r in index.terms.filter(F.col("term") == term).collect()
-    }
-    df_text, ttf_text = st.get(term, (0, 0))
+    searcher = IndexSearcher(index)
+    ctx = searcher._bind_terms([term])
+    df_text = ctx.term_stats.get(term, (0, 0))[0]
     pseudo_df = max(df_text, df_kw)
     if pseudo_df == 0:
         return spark.createDataFrame([], "doc_id long, score double")
-    sttf_comb = w_text * index.sum_total_term_freq + w_kw * n
-    avgdl = sttf_comb / float(n)
-    idf = _f64_idf(pseudo_df, n)
+    # The combined length depends only on the text norm byte (the
+    # keyword field is one token), so its quantization is a 256-entry
+    # table. Math.round semantics (floor(x+0.5), half UP) as in
+    # MultiNormsLeafSimScorer's norm combination — np.rint would round
+    # half-to-even and diverge for fractional weights.
+    comb = np.floor(w_text * _DLQ + w_kw + 0.5).astype(np.int64)
+    weight = _f64_weight(
+        ctx,
+        [pseudo_df],
+        dlq=byte4_to_int(int_to_byte4(comb)),
+        sttf=w_text * index.sum_total_term_freq + w_kw * n,
+    )
 
-    # per-doc combined freq + combined quantized length
+    # per-doc combined freq, keyed by the doc's text norm byte
     text_posts = (
         read_postings(index, [term]).select("doc_id", "freq")
         if df_text
         else spark.createDataFrame([], "doc_id long, freq int")
     )
-    base = (
+    freqs = (
         index.norms.select("doc_id", "norm")
         .join(kw, "doc_id")
         .join(text_posts, "doc_id", "left")
@@ -678,30 +668,11 @@ def combined_field_f64(
             (
                 F.coalesce(F.col("freq"), F.lit(0)) * F.lit(float(w_text))
                 + F.when(F.col(kw_col) == term, F.lit(float(w_kw))).otherwise(0.0)
-            ).alias("cfreq"),
+            ).alias("freq"),
         )
-        .filter(F.col("cfreq") > 0)
+        .filter(F.col("freq") > 0)
     )
-
-    @F.pandas_udf("long")
-    def comb_dlq(norm: pd.Series) -> pd.Series:
-        dl_text = byte4_to_int(norm.values.astype(np.int64))
-        # Math.round semantics (floor(x+0.5), half UP) as in
-        # MultiNormsLeafSimScorer's norm combination — np.rint would
-        # round half-to-even and diverge for fractional weights
-        comb = np.floor(w_text * dl_text + w_kw * 1.0 + 0.5).astype(np.int64)
-        return pd.Series(byte4_to_int(int_to_byte4(comb)))
-
-    scored = base.withColumn("dl_q", comb_dlq("norm")).withColumn(
-        "s",
-        F.lit(idf)
-        * F.col("cfreq")
-        / (
-            F.col("cfreq")
-            + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_q") / F.lit(avgdl))
-        ),
-    )
-    return _topk(IndexSearcher(index)._live(scored), k)
+    return _plan_topk(searcher, _freq_plan(freqs, term, weight), k)
 
 
 def oracle_combined_field_sql(

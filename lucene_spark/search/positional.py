@@ -24,14 +24,16 @@ Spark re-expressions of Lucene's positional and multi-term scorers:
 - **DisjunctionMaxQuery** (`search/DisjunctionMaxScorer.java:60-72`):
   score = max(sub scores) + tieBreaker * sum(other sub scores).
 
-Everything decodes posting blocks in Arrow-batched ``mapInPandas``
-(numpy kernels), then combines with DataFrame joins/aggs — no per-row
-Python outside the batched kernels.
+The functions here are freq producers: they decode posting blocks in
+Arrow-batched ``mapInPandas`` (numpy kernels) and yield one (doc_id,
+freq, norm) row per doc. Scoring is not theirs: the top-k functions
+hand those rows to :class:`IndexSearcher`'s one BM25 kernel as a
+pseudo-term, and DisMax runs as a searcher query.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Tuple
+from typing import Dict, List
 
 import numpy as np
 import pandas as pd
@@ -39,9 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lucene_spark.functions.bm25 import BM25, bm25_idf
 from lucene_spark.index.builder import InvertedIndex
 from lucene_spark.index.postings import read_postings
+from lucene_spark.search.query import BoostQuery, DisjunctionMaxQuery, PhraseQuery, TermQuery
+from lucene_spark.search.searcher import IndexSearcher, _freq_plan, _Plan
 
 __all__ = [
     "decode_positions",
@@ -52,15 +55,6 @@ __all__ = [
     "synonym_topk",
     "dismax_topk",
 ]
-
-_FREQ_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("freq", T.DoubleType(), False),
-        T.StructField("norm", T.IntegerType(), False),
-    ]
-)
-
 
 def decode_positions(
     index: InvertedIndex,
@@ -346,14 +340,6 @@ def _sloppy_phrase_kernel_repeats(
     return total
 
 
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    return (
-        scored.select("doc_id", F.col("score").cast("float").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
 def phrase_topk(
     index: InvertedIndex,
     phrase: List[str],
@@ -368,36 +354,8 @@ def phrase_topk(
     weight = boost * (Σ_i idf(df_i)) with the idf sum accumulated in
     float64 and cast to float32 (`BM25Similarity.java:161-170`).
     """
-    stats = {
-        r["term"]: int(r["doc_freq"])
-        for r in index.terms.filter(F.col("term").isin(list(set(phrase)))).collect()
-    }
-    if any(t not in stats for t in set(phrase)):
-        return index.spark.createDataFrame([], "doc_id long, score float")
-    idf_sum = float(
-        sum(float(bm25_idf(stats[t], index.doc_count)) for t in dict.fromkeys(phrase))
-    )
-    scorer = BM25(
-        doc_freq=1,  # unused: weight overridden below
-        doc_count=index.doc_count,
-        sum_total_term_freq=index.sum_total_term_freq,
-        boost=boost,
-        k1=k1,
-        b=b,
-    )
-    w = np.float32(boost) * np.float32(idf_sum)
-    cache = scorer.cache
-
-    freqs = phrase_freqs(index, phrase, slop=slop)
-
-    @F.pandas_udf(T.DoubleType())
-    def score_udf(freq: pd.Series, norm: pd.Series) -> pd.Series:
-        f = freq.values.astype(np.float32)
-        ni = cache[norm.values.astype(np.int64) & 0xFF]
-        s = w - w / (np.float32(1.0) + f * ni)
-        return pd.Series(s.astype(np.float64))
-
-    return _topk(freqs.withColumn("score", score_udf("freq", "norm")), k)
+    q = BoostQuery(PhraseQuery(tuple(phrase), slop), boost)
+    return IndexSearcher(index, k1=k1, b=b).search(q, k, "exhaustive")
 
 
 # --- SynonymQuery ----------------------------------------------------------
@@ -416,6 +374,17 @@ def synonym_freqs(index: InvertedIndex, term_boosts: Dict[str, float]) -> DataFr
     )
 
 
+def _synonym_plan(index: InvertedIndex, ctx, terms: List[str], boost: float = 1.0, weigh=None):
+    """Summed synonym freqs scored as one pseudo-term with df = the max
+    over the indexed terms (`search/SynonymQuery.java:212-231`).
+    ``weigh(dfs, boost)`` builds the weight (default float32)."""
+    present = [t for t in dict.fromkeys(terms) if t in ctx.term_stats]
+    if not present:
+        return _Plan(None, {})
+    weight = (weigh or ctx.weight)([max(ctx.term_stats[t][0] for t in present)], boost)
+    return _freq_plan(synonym_freqs(index, {t: 1.0 for t in present}), " ".join(present), weight)
+
+
 def synonym_topk(
     index: InvertedIndex,
     terms: List[str],
@@ -425,32 +394,9 @@ def synonym_topk(
     b: float = 0.75,
 ) -> DataFrame:
     """SynonymQuery top-k: one pseudo-term, df = max, freq = Σ freqs."""
-    stats = {
-        r["term"]: int(r["doc_freq"])
-        for r in index.terms.filter(F.col("term").isin(terms)).collect()
-    }
-    if not stats:
-        return index.spark.createDataFrame([], "doc_id long, score float")
-    pseudo_df = max(stats.values())
-    scorer = BM25(
-        doc_freq=pseudo_df,
-        doc_count=index.doc_count,
-        sum_total_term_freq=index.sum_total_term_freq,
-        boost=boost,
-        k1=k1,
-        b=b,
-    )
-    w, cache = scorer.weight, scorer.cache
-    freqs = synonym_freqs(index, {t: 1.0 for t in terms if t in stats})
-
-    @F.pandas_udf(T.DoubleType())
-    def score_udf(freq: pd.Series, norm: pd.Series) -> pd.Series:
-        f = freq.values.astype(np.float32)
-        ni = cache[norm.values.astype(np.int64) & 0xFF]
-        s = w - w / (np.float32(1.0) + f * ni)
-        return pd.Series(s.astype(np.float64))
-
-    return _topk(freqs.withColumn("score", score_udf("freq", "norm")), k)
+    searcher = IndexSearcher(index, k1=k1, b=b)
+    plan = _synonym_plan(index, searcher._bind_terms(terms), terms, boost)
+    return searcher._topk(searcher._frame(plan), k)
 
 
 # --- DisjunctionMaxQuery ---------------------------------------------------
@@ -468,26 +414,12 @@ def dismax_topk(
 
     The float arithmetic in `DisjunctionMaxScorer.java:60-72` is
     ``(float)(scoreMax + otherScoreSum * tieBreakerMultiplier)`` with
-    otherScoreSum accumulated in double; we mirror that.
+    otherScoreSum accumulated in double; the searcher mirrors that.
     """
-    from lucene_spark.search.searcher import IndexSearcher
-
-    searcher = IndexSearcher(index, k1=k1, b=b)
-    ctx = searcher._bind_terms(list(term_boosts))
-    scored = searcher._decoded(searcher._terms_plan(ctx, dict(term_boosts)))
-    agg = scored.groupBy("doc_id").agg(
-        F.max("score").alias("mx"), F.sum("score").alias("sm")
+    q = DisjunctionMaxQuery(
+        tuple(BoostQuery(TermQuery(t), w) for t, w in term_boosts.items()), tie_breaker
     )
-
-    @F.pandas_udf(T.DoubleType())
-    def combine(mx: pd.Series, sm: pd.Series) -> pd.Series:
-        out = (
-            mx.values.astype(np.float64)
-            + (sm.values - mx.values) * np.float64(tie_breaker)
-        ).astype(np.float32)
-        return pd.Series(out.astype(np.float64))
-
-    return _topk(agg.withColumn("score", combine("mx", "sm")), k)
+    return IndexSearcher(index, k1=k1, b=b).search(q, k, "exhaustive")
 
 
 def phrase_wildcard_freqs(

@@ -7,8 +7,10 @@
   combine). The Spark re-expression keeps Lucene's "advance the second
   scorer only to window docIDs" efficiency: the window's [min, max]
   docID range prunes posting blocks before the positional decode
-  (`decode_positions(doc_range=...)` — the skip-list analog), and the
-  per-doc second-pass join is a broadcast of the k-bounded window.
+  (`decode_positions(doc_range=...)` — the skip-list analog), the
+  phrase rows are restricted to the window by a broadcast join, and
+  the phrase freqs score through the searcher's kernel as a float64
+  pseudo-term, like :func:`lucene_spark.search.parity.phrase_bm25_f64`.
 - :func:`saturation` / :func:`log_feature` / :func:`sigmoid` +
   :func:`feature_bm25_topk` — `document/FeatureField.java:63-147`:
   static per-document ranking signals (pagerank, freshness, url
@@ -22,18 +24,14 @@
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Dict
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lucene_spark.index.builder import InvertedIndex
-from lucene_spark.search.parity import (
-    _bm25_scored_f64,
-    _dlq_col,
-    _f64_idf,
-    _f64_score_col,
-)
-from lucene_spark.search.positional import phrase_freqs
+from lucene_spark.search.parity import _bm25_scored_f64, _f64_weight
+from lucene_spark.search.searcher import IndexSearcher
 
 __all__ = [
     "rescore_phrase_topk",
@@ -75,29 +73,21 @@ def rescore_phrase_topk(
         if bounds["lo"] is None:
             return spark.createDataFrame([], "doc_id long, score double")
 
-        stats = {
-            r["term"]: int(r["doc_freq"])
-            for r in index.terms.filter(
-                F.col("term").isin(list(set(phrase)))
-            ).collect()
-        }
-        if all(t in stats for t in set(phrase)):
-            n, sttf = index.doc_count, index.sum_total_term_freq
-            p_weight = sum(_f64_idf(stats[t], n) for t in dict.fromkeys(phrase))
-            second = (
-                phrase_freqs(index, phrase, doc_range=(bounds["lo"], bounds["hi"]))
-                .join(F.broadcast(win.select("doc_id")), "doc_id")
-                .join(_dlq_col(spark), "norm")
-                .withColumn("ps", _f64_score_col(p_weight, n, sttf))
-                .select("doc_id", "ps")
-            )
-            combined = win.join(second, "doc_id", "left").withColumn(
-                "c",
-                F.col("s")
-                + F.lit(float(weight)) * F.coalesce(F.col("ps"), F.lit(0.0)),
-            )
-        else:  # phrase has an unindexed term: second pass matches nothing
-            combined = win.withColumn("c", F.col("s"))
+        searcher = IndexSearcher(index)
+        ctx = searcher._bind_terms(phrase)
+        plan = searcher._phrase_plan(
+            ctx,
+            phrase,
+            doc_range=(bounds["lo"], bounds["hi"]),
+            weigh=partial(_f64_weight, ctx),
+        )
+        if plan.blocks is not None:  # None: an unindexed term matches nothing
+            plan.blocks = plan.blocks.join(F.broadcast(win.select("doc_id")), "doc_id")
+        second = searcher._frame(plan).withColumnRenamed("score", "ps")
+        combined = win.join(second, "doc_id", "left").withColumn(
+            "c",
+            F.col("s") + F.lit(float(weight)) * F.coalesce(F.col("ps"), F.lit(0.0)),
+        )
         # Materialize the k result rows off the still-cached window,
         # then release it (r2 advice: no persisted blocks outlive the
         # query).

@@ -28,8 +28,18 @@ Two routes decide *where* step 3 runs, never *which* blocks it reads:
   in-process over a few hundred blocks; a ``mapInPandas`` job would
   start Python tasks on every cached partition instead.
 - **distributed** — everything else (deletes, phrase, span, DisMax,
-  queries over the cap): the same kernel in ``mapInPandas``, clauses
-  combined with DataFrame aggregations.
+  non-flat booleans, queries over the cap): the same kernel in
+  ``mapInPandas``. A non-flat boolean keys each clause's rows by clause
+  and combines them in one conditional aggregation (:meth:`_flat_agg`).
+
+Scoring follows Lucene's split of a freq producer from one
+``BM25Similarity`` SimScorer. Term postings are one producer; phrase
+matches, a synonym group's summed freq and a combined field's weighted
+freq are others, whose (doc_id, freq, norm) rows score as one
+pseudo-term (:func:`_freq_plan`). Every producer's rows go through the
+same kernel with (weight, normInverse[256]) weights: float32 for
+serving, float64 for the oracle-parity paths
+(:mod:`lucene_spark.search.parity`).
 
 Block selection (exhaustive, the WAND ``keep`` filter, the conjunction
 prune's semi-join) happens before the route is taken, in a ``_Plan``
@@ -60,6 +70,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from functools import reduce
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -69,7 +80,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lucene_spark.functions.bm25 import BM25
+from lucene_spark.functions.bm25 import BM25, bm25_avgdl, bm25_cache, bm25_idf
 from lucene_spark.index.builder import InvertedIndex
 from lucene_spark.index.postings import decode_blocks, decode_frame
 from lucene_spark.search.query import (
@@ -264,18 +275,30 @@ class _Ctx:
             b=self.b,
         )
 
+    def weight(self, dfs, boost: float = 1.0) -> Tuple[np.float32, np.ndarray]:
+        """Float32 (boost·idf, normInverse[256]) of a term or pseudo-term
+        whose idf is Σ idf(df) over ``dfs``, accumulated in double and
+        cast to float (`BM25Similarity.java:161-170`)."""
+        idf = np.float32(sum(float(bm25_idf(df, self.doc_count)) for df in dfs))
+        avgdl = bm25_avgdl(self.sum_total_term_freq, self.doc_count)
+        return np.float32(boost) * idf, bm25_cache(avgdl, self.k1, self.b)
+
 
 @dataclass
 class _Plan:
-    """A term-shaped query after block selection: the surviving blocks,
-    the weights their postings score with, and how scored postings
-    combine into doc scores. Both routes evaluate exactly this.
+    """A query after block selection: the rows the kernel reads, the
+    weights they score with, and how scored rows combine into doc
+    scores. Both routes evaluate exactly this.
+
+    ``blocks`` holds encoded posting blocks, or rows a freq producer
+    already decoded to (doc_id, term, freq, norm), where ``term`` may
+    key a pseudo-term (:func:`_freq_plan`).
 
     ``groups`` is None for a plain per-doc sum (a term, a WAND
-    disjunction); for a flat boolean it holds the [(occur, terms)]
-    presence groups, ``scoring`` the terms summed into the score, and
-    ``need`` the SHOULD groups a doc must match. ``theta`` keeps docs
-    whose sum is >= θ (WAND).
+    disjunction, a flat SHOULD boolean needing one match); otherwise it
+    holds the [(occur, terms)] presence groups, ``scoring`` the terms
+    summed into the score, and ``need`` the SHOULD groups a doc must
+    match. ``theta`` keeps docs whose sum is >= θ (WAND).
     """
 
     blocks: Optional[DataFrame]  # None: nothing can match
@@ -284,6 +307,20 @@ class _Plan:
     scoring: frozenset = frozenset()
     need: int = 0
     theta: Optional[float] = None
+
+
+def _freq_plan(freqs: DataFrame, key: str, weight) -> _Plan:
+    """A freq producer's (doc_id, freq, norm) rows, one per doc, scored
+    as the pseudo-term ``key`` with ``weight`` = (w, normInverse[256])."""
+    return _Plan(freqs.select("doc_id", F.lit(key).alias("term"), "freq", "norm"), {key: weight})
+
+
+def _need(groups, msm: int) -> int:
+    """SHOULD groups a doc must match: msm when a MUST/FILTER group
+    exists, else at least one when any SHOULD group does."""
+    if any(o in (Occur.MUST, Occur.FILTER) for o, _ in groups):
+        return msm
+    return max(msm, 1 if any(o == Occur.SHOULD for o, _ in groups) else 0)
 
 
 class IndexSearcher:
@@ -355,7 +392,11 @@ class IndexSearcher:
         plan = self._plan(q, ctx, k, mode)
         if plan is not None and self._local_route(ctx):
             return self._local_topk(plan, k)
-        result = self._frame(plan) if plan is not None else self._eval(q, ctx, boost=1.0)
+        return self._topk(self._frame(plan) if plan is not None else self._eval(q, ctx, 1.0), k)
+
+    def _topk(self, result: DataFrame, k: int) -> DataFrame:
+        """Live top k of a (doc_id, score double) frame, scores cast to
+        float, ordered score desc, doc_id asc."""
         return (
             self._live(result)
             .select("doc_id", F.col("score").cast("float").alias("score"))
@@ -415,14 +456,13 @@ class IndexSearcher:
             pa.table({"doc_id": docs[top], "score": score[top]}), _TOPK_SCHEMA
         )
 
-    def _frame(self, plan: _Plan, posts: Optional[DataFrame] = None) -> DataFrame:
-        """Distributed route: the plan as a (doc_id, score double) frame.
-        ``posts`` (see :meth:`_decoded`) replaces the plan's blocks."""
+    def _frame(self, plan: _Plan) -> DataFrame:
+        """Distributed route: the plan as a (doc_id, score double) frame."""
         if plan.blocks is None:
             return self.index.spark.createDataFrame([], "doc_id long, score double")
-        scored = self._decoded(plan, posts)
+        scored = self._decoded(plan)
         if plan.groups is not None:
-            return self._flat_agg(scored, plan)
+            return self._flat_agg(scored, plan.groups, plan.scoring, plan.need)
         if len(plan.weights) == 1 and plan.theta is None:
             return scored.select("doc_id", "score")  # one posting per doc
         agg = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
@@ -438,11 +478,11 @@ class IndexSearcher:
     ) -> _Plan:
         """Score every block of the given (indexed) terms, or `blocks`
         when a prune already restricted them to those terms."""
-        weights = {}
-        for term, boost in term_boosts.items():
-            s = ctx.scorer(term, boost)
-            if s is not None:
-                weights[term] = (s.weight, s.cache)
+        weights = {
+            t: ctx.weight([ctx.term_stats[t][0]], b)
+            for t, b in term_boosts.items()
+            if t in ctx.term_stats
+        }
         if not weights:
             return _Plan(None, {})
         if blocks is None:
@@ -650,17 +690,13 @@ class IndexSearcher:
     def _term_blocks(self, terms: List[str]) -> DataFrame:
         return self.index.blocks.filter(F.col("term").isin(terms))
 
-    def _decoded(self, plan: _Plan, posts: Optional[DataFrame] = None) -> DataFrame:
-        """(doc_id, term, score) of every posting of the plan's blocks,
-        or of ``posts``, the same terms' postings already decoded to
-        (doc_id, term, freq, norm) rows."""
+    def _decoded(self, plan: _Plan) -> DataFrame:
+        """(doc_id, term, score) of every row of the plan: each posting
+        of its blocks, or each decoded (doc_id, term, freq, norm) row."""
         if plan.blocks is None:
             return self.index.spark.createDataFrame([], _SCORED_SCHEMA)
-        if posts is None:
-            src = plan.blocks.select(*_BLOCK_COLS)
-        else:
-            src = posts.filter(F.col("term").isin(list(plan.weights)))
-            src = src.select("doc_id", "term", "freq", "norm")
+        decoded = "docs_packed" not in plan.blocks.columns
+        src = plan.blocks.select(*(("doc_id", "term", "freq", "norm") if decoded else _BLOCK_COLS))
         return src.mapInPandas(_decode_score_udf(plan.weights), _SCORED_SCHEMA)
 
     def _matching_docs(self, q: Query, ctx: _Ctx) -> DataFrame:
@@ -720,41 +756,7 @@ class IndexSearcher:
                 union = d if union is None else union.unionByName(d)
             return union.distinct()
         if isinstance(q, BooleanQuery):
-            pos = [c for c in q.clauses if c.occur in (Occur.SHOULD, Occur.MUST, Occur.FILTER)]
-            neg = [c for c in q.clauses if c.occur == Occur.MUST_NOT]
-            req = [c for c in pos if c.occur in (Occur.MUST, Occur.FILTER)]
-            opt = [c for c in pos if c.occur == Occur.SHOULD]
-            msm = q.minimum_number_should_match
-
-            # flat term disjunction (e.g. a rewritten multi-term query):
-            # ONE decode pass over all matched terms' blocks instead of
-            # a union of per-term passes
-            flat_opt = self._flat_should_terms(opt)
-            if flat_opt is not None and not req and not neg and msm <= 1:
-                present = [t for t in flat_opt if t in ctx.term_stats]
-                if not present:
-                    return spark.createDataFrame([], _DOCS_SCHEMA)
-                return decode_frame(self._term_blocks(present), ["doc_id"]).distinct()
-
-            docs: Optional[DataFrame] = None
-            if opt:
-                union = None
-                for c in opt:
-                    d = self._matching_docs(c.query, ctx).withColumn("_one", F.lit(1))
-                    union = d if union is None else union.unionByName(d)
-                need = max(msm, 1) if not req else msm
-                agg = union.groupBy("doc_id").agg(F.count("_one").alias("_m"))
-                docs = agg.filter(F.col("_m") >= need).select("doc_id") if need > 0 else agg.select("doc_id")
-                if req and msm == 0:
-                    docs = None  # SHOULD optional when required clauses exist
-            for c in req:
-                d = self._matching_docs(c.query, ctx)
-                docs = d if docs is None else docs.join(d.distinct(), "doc_id", "semi")
-            if docs is None:
-                docs = spark.createDataFrame([], _DOCS_SCHEMA)
-            for c in neg:
-                docs = docs.join(self._matching_docs(c.query, ctx).distinct(), "doc_id", "left_anti")
-            return docs.distinct()
+            return self._eval_boolean(q, ctx, 1.0, match_only=True).select("doc_id")
         raise NotImplementedError(f"matching_docs: {type(q).__name__}")
 
     def _eval(self, q: Query, ctx: _Ctx, boost: float) -> DataFrame:
@@ -778,18 +780,13 @@ class IndexSearcher:
         if isinstance(q, TermQuery):
             return self._frame(self._terms_plan(ctx, {q.term: boost}))
         if isinstance(q, PhraseQuery):
-            from lucene_spark.search.positional import phrase_topk
-
-            return phrase_topk(
-                self.index,
-                list(q.terms),
-                k=self.index.doc_count or 1,
-                slop=q.slop,
-                boost=boost,
-                k1=self.k1,
-                b=self.b,
-            ).select("doc_id", F.col("score").cast("double").alias("score"))
+            return self._frame(self._phrase_plan(ctx, q.terms, q.slop, boost))
         if isinstance(q, DisjunctionMaxQuery):
+            groups = [self._term_group(sub, boost) for sub in q.queries]
+            if all(g is not None and len(g) == 1 for g in groups):
+                terms = {t: b for g in groups for t, b in g.items()}
+                if len(terms) == len(groups):  # one kernel pass over every disjunct
+                    return _dismax(self._decoded(self._terms_plan(ctx, terms)), q.tie_breaker)
             union = None
             for sub in q.queries:
                 d = self._eval(sub, ctx, boost)
@@ -799,17 +796,21 @@ class IndexSearcher:
             return self._eval_boolean(q, ctx, boost)
         raise NotImplementedError(f"eval: {type(q).__name__}")
 
-    def _flat_should_terms(self, opt) -> Optional[List[str]]:
-        """Terms when every SHOULD clause unwraps to a TermQuery."""
-        terms = []
-        for c in opt:
-            sub = c.query
-            while isinstance(sub, (BoostQuery, ConstantScoreQuery)):
-                sub = sub.query
-            if not isinstance(sub, TermQuery):
-                return None
-            terms.append(sub.term)
-        return terms
+    def _phrase_plan(
+        self, ctx: _Ctx, phrase, slop: int = 0, boost: float = 1.0, doc_range=None, weigh=None
+    ) -> _Plan:
+        """Phrase freqs scored as one pseudo-term whose idf sums the
+        distinct terms' idfs. ``weigh(dfs, boost)`` builds the weight
+        (default :meth:`_Ctx.weight`, float32); an unindexed term
+        matches nothing."""
+        from lucene_spark.search.positional import phrase_freqs
+
+        terms = list(dict.fromkeys(phrase))
+        if any(t not in ctx.term_stats for t in terms):
+            return _Plan(None, {})
+        weight = (weigh or ctx.weight)([ctx.term_stats[t][0] for t in terms], boost)
+        freqs = phrase_freqs(self.index, list(phrase), slop=slop, doc_range=doc_range)
+        return _freq_plan(freqs, " ".join(phrase), weight)
 
     def _term_group(self, sub: Query, boost: float):
         """A clause body → {term: boost} when it is a (boosted) term or
@@ -876,27 +877,30 @@ class IndexSearcher:
                 all_terms.setdefault(t, 1.0)
         pruned = self._conjunction_pruned_blocks(ctx, flat, list(all_terms))
         plan = self._terms_plan(ctx, all_terms, blocks=pruned)
-        has_req = any(o in (Occur.MUST, Occur.FILTER) for o, _ in flat)
-        has_should = any(o == Occur.SHOULD for o, _ in flat)
-        msm = q.minimum_number_should_match
+        need = _need(flat, q.minimum_number_should_match)
+        if need <= 1 and all(o == Occur.SHOULD for o, _ in flat):
+            return plan  # every posting's doc matches: a plain per-doc sum
         plan.groups = [(o, frozenset(g)) for o, g in flat]
         plan.scoring = frozenset(scoring)
-        plan.need = msm if has_req else max(msm, 1 if has_should else 0)
+        plan.need = need
         return plan
 
     @staticmethod
-    def _flat_agg(scored: DataFrame, plan: _Plan) -> DataFrame:
-        """Distributed combine of a flat-boolean plan: per-doc score sum
-        and per-group presence flags in one conditional aggregation."""
+    def _flat_agg(scored: DataFrame, groups, scoring, need: int) -> DataFrame:
+        """Distributed combine of (doc_id, term, score) rows under
+        [(occur, terms)] presence groups: per-doc sum of the ``scoring``
+        terms' scores and per-group presence flags in one conditional
+        aggregation; a doc needs every MUST/FILTER group, no MUST_NOT
+        group and ``need`` SHOULD groups."""
         in_ = lambda ts: F.col("term").isin(list(ts)) if ts else F.lit(False)
-        nots = [t for o, g in plan.groups if o == Occur.MUST_NOT for t in g]
+        nots = [t for o, g in groups if o == Occur.MUST_NOT for t in g]
         aggs = [
-            F.sum(F.when(in_(plan.scoring), F.col("score"))).alias("score"),
+            F.sum(F.when(in_(scoring), F.col("score"))).alias("score"),
             F.max(F.when(in_(nots), F.lit(1))).alias("_n"),
         ]
         # per-group presence flags (a group matches when ANY member does)
         req_flags, should_flags = [], []
-        for i, (o, g) in enumerate(plan.groups):
+        for i, (o, g) in enumerate(groups):
             if o in (Occur.MUST, Occur.FILTER):
                 aggs.append(F.max(F.when(in_(g), F.lit(1))).alias(f"_r{i}"))
                 req_flags.append(f"_r{i}")
@@ -908,12 +912,12 @@ class IndexSearcher:
         cond = F.col("_n").isNull()
         for f_ in req_flags:
             cond = cond & (F.col(f_) == 1)
-        if should_flags and plan.need > 0:
+        if should_flags and need > 0:
             n_should = sum(
                 [F.coalesce(F.col(f_), F.lit(0)) for f_ in should_flags[1:]],
                 F.coalesce(F.col(should_flags[0]), F.lit(0)),
             )
-            cond = cond & (n_should >= plan.need)
+            cond = cond & (n_should >= need)
         return agg.filter(cond).select(
             "doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score")
         )
@@ -988,57 +992,35 @@ class IndexSearcher:
             .join(F.broadcast(lead_meta), on=cond, how="left_semi")
         )
 
-    def _eval_boolean(self, q: BooleanQuery, ctx: _Ctx, boost: float) -> DataFrame:
-        spark = self.index.spark
+    def _eval_boolean(
+        self, q: BooleanQuery, ctx: _Ctx, boost: float, match_only: bool = False
+    ) -> DataFrame:
+        """A flat term boolean is one plan. Any other boolean keys each
+        clause's rows by clause index — the scored rows of SHOULD/MUST
+        clauses, the match set of FILTER/MUST_NOT ones (of every clause
+        when ``match_only``: the doc set is all that is used) — and
+        combines them once with :meth:`_flat_agg` under the flat plan's
+        rule."""
         flat = self._flat_term_clauses(q)
         if flat is not None and any(
             o in (Occur.SHOULD, Occur.MUST) for o, _ in flat
         ):
             return self._frame(self._flat_plan(flat, q, ctx, boost))
-        should = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
-        must = [c.query for c in q.clauses if c.occur == Occur.MUST]
-        filt = [c.query for c in q.clauses if c.occur == Occur.FILTER]
-        nots = [c.query for c in q.clauses if c.occur == Occur.MUST_NOT]
-        msm = q.minimum_number_should_match
-
-        scored = None
-        for sub in should + must:
-            d = self._eval(sub, ctx, boost).withColumn(
-                "_is_should", F.lit(1 if sub in should else 0)
-            )
-            scored = d if scored is None else scored.unionByName(d)
-
-        if scored is not None:
-            agg = scored.groupBy("doc_id").agg(
-                F.sum("score").alias("score"),
-                F.sum("_is_should").alias("_nshould"),
-            )
-            if should and (msm > 0 or not (must or filt)):
-                agg = agg.filter(F.col("_nshould") >= max(msm, 1 if not (must or filt) else msm))
-            result = agg.select("doc_id", "score")
-            # every MUST clause must be present: semi-join its match set
-            for sub in must:
-                result = result.join(
-                    self._matching_docs(sub, ctx).distinct(), "doc_id", "semi"
-                )
-        else:
-            # filter-only boolean scores 0 (ConstantScore handled above)
-            result = None
-
-        for sub in filt:
-            d = self._matching_docs(sub, ctx).distinct()
-            result = (
-                d.select("doc_id", F.lit(0.0).alias("score"))
-                if result is None
-                else result.join(d, "doc_id", "semi")
-            )
-        if result is None:
-            return spark.createDataFrame([], "doc_id long, score double")
-        for sub in nots:
-            result = result.join(
-                self._matching_docs(sub, ctx).distinct(), "doc_id", "left_anti"
-            )
-        return result
+        rows, groups = [], []
+        for i, c in enumerate(q.clauses):
+            if c.occur in (Occur.SHOULD, Occur.MUST) and not match_only:
+                d = self._eval(c.query, ctx, boost)
+            else:
+                d = self._matching_docs(c.query, ctx).withColumn("score", F.lit(0.0))
+            rows.append(d.select("doc_id", F.lit(str(i)).alias("term"), "score"))
+            groups.append((c.occur, frozenset([str(i)])))
+        scoring = [str(i) for i, c in enumerate(q.clauses) if c.occur in (Occur.SHOULD, Occur.MUST)]
+        return self._flat_agg(
+            reduce(DataFrame.unionByName, rows),
+            groups,
+            frozenset(scoring),
+            _need(groups, q.minimum_number_should_match),
+        )
 
     # -- block-max WAND ---------------------------------------------------
     def _bootstrap_theta(self, scorers, weights, heads, k: int) -> float:

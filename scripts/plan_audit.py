@@ -120,6 +120,43 @@ def main() -> None:
         )
     )
 
+    # 3b. a one-term parity query is a plain per-doc sum: its docs have
+    # one posting each, so the plan carries no aggregation and no
+    # shuffle (cut at the cache boundary: the cached blocks embed the
+    # build's plan)
+    n_ex3 = p3.split("InMemoryRelation", 1)[0].count("Exchange")
+    checks.append(
+        (
+            "BM25 parity one-term plan: no aggregation, no Exchange",
+            n_ex3 == 0 and "HashAggregate" not in p3.split("InMemoryRelation", 1)[0],
+            f"{n_ex3} Exchange(s) above the cached blocks",
+            "",
+        )
+    )
+
+    # 3c. f64 phrase parity: the phrase-freq rows score in ONE
+    # MapInPandas (the searcher's kernel, (doc_id, term, freq, norm) →
+    # (doc_id, term, score)) with no join on a norm→dl_q table
+    from lucene_spark.search.parity import phrase_bm25_f64
+
+    pos_idx = InvertedIndex.build(docs, analyzer="simple", docs_per_segment=512, positions=True)
+    p3c = plan_of(phrase_bm25_f64(pos_idx, ["hash", "join"], k=10))
+    n_kernel = 0
+    for m in re.finditer(r"\(\d+\) MapInPandas\nInput \[\d+\]: \[([^\]]*)\]\nArguments: ([^\n]*)", p3c):
+        cols_in = [c.split("#")[0] for c in m.group(1).split(", ")]
+        cols_out = [c.split("#")[0] for c in m.group(2).rsplit("[", 1)[1].split("]")[0].split(", ")]
+        n_kernel += cols_in == ["doc_id", "term", "freq", "norm"] and cols_out == ["doc_id", "term", "score"]
+    checks.append(
+        (
+            "f64 phrase parity: one kernel MapInPandas over phrase freqs, no dl_q join",
+            n_kernel == 1 and "dl_q" not in p3c,
+            f"{n_kernel} scoring MapInPandas node(s), want exactly 1; dl_q "
+            + ("absent" if "dl_q" not in p3c else "present"),
+            p3c,
+        )
+    )
+    pos_idx.unpersist()
+
     # 4. facet agg: map-side partial aggregation + batched columnar scan
     # (AQE's pre-execution formatted plan hides codegen annotations, so
     # codegen is probed via explain(codegen) separately)

@@ -3,20 +3,28 @@
 DataFrame plan ≡ naive single-node reference, on every (docID, score).
 """
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
 
+from lucene_spark.functions.bm25 import BM25, bm25_idf
+from lucene_spark.functions.smallfloat import int_to_byte4
 from lucene_spark.index import InvertedIndex
 from lucene_spark.search import (
     BooleanClause,
     BooleanQuery,
     BoostQuery,
+    ConstantScoreQuery,
+    DisjunctionMaxQuery,
     IndexSearcher,
     Occur,
+    PhraseQuery,
     TermQuery,
 )
 from tests.ref_impl import NaiveIndex
+from tests.test_positional import naive_phrase_freq, naive_tokens, pidx  # noqa: F401 (fixture)
 
 
 def _random_corpus(rng, n_docs, vocab_size):
@@ -292,3 +300,103 @@ def test_wand_exact_beside_weak_rare_term(spark):
     for mode in ("maxscore", "exhuastive", ""):
         with pytest.raises(ValueError, match="unknown search mode"):
             s.search(q, 10, mode)
+
+
+# --- non-flat booleans: one clause-keyed combine vs a naive evaluation -----
+
+
+def _naive_scores(q):
+    """doc → double score of ``q`` over the positional fixture's tokens,
+    with the engine's float32 term/phrase scores and double combines."""
+    toks = naive_tokens()
+    n, sttf = len(toks), sum(len(t) for t in toks.values())
+    norms = {d: int(int_to_byte4(len(t))) for d, t in toks.items()}
+    tf = {d: Counter(t) for d, t in toks.items()}
+    df = lambda t: sum(1 for c in tf.values() if c[t])
+    boost = 1.0
+    if isinstance(q, BoostQuery):
+        q, boost = q.query, q.boost
+    if isinstance(q, TermQuery):
+        s = BM25(doc_freq=df(q.term), doc_count=n, sum_total_term_freq=sttf, boost=boost)
+        return {
+            d: float(s.score([c[q.term]], [norms[d]])[0]) for d, c in tf.items() if c[q.term]
+        }
+    if isinstance(q, PhraseQuery):
+        idf = np.float32(sum(float(bm25_idf(df(t), n)) for t in dict.fromkeys(q.terms)))
+        w = np.float32(boost) * idf
+        cache = BM25(doc_freq=1, doc_count=n, sum_total_term_freq=sttf).cache
+        return {
+            d: float(w - w / (np.float32(1.0) + np.float32(f) * cache[norms[d]]))
+            for d, f in naive_phrase_freq(list(q.terms)).items()
+        }
+    if isinstance(q, DisjunctionMaxQuery):
+        per_doc = {}
+        for sub in q.queries:
+            for d, s in _naive_scores(sub).items():
+                per_doc.setdefault(d, []).append(s)
+        return {d: max(ss) + (sum(ss) - max(ss)) * q.tie_breaker for d, ss in per_doc.items()}
+    if isinstance(q, ConstantScoreQuery):
+        return {d: 1.0 for d in _naive_scores(q.query)}
+    if isinstance(q, BooleanQuery):
+        scored = {d: 0.0 for d in toks}
+        n_should = Counter()
+        keep = set(toks)
+        for c in q.clauses:
+            hits = _naive_scores(c.query)
+            if c.occur == Occur.MUST_NOT:
+                keep -= set(hits)
+                continue
+            if c.occur in (Occur.MUST, Occur.FILTER):
+                keep &= set(hits)
+            if c.occur == Occur.SHOULD:
+                n_should.update(list(hits))
+            if c.occur in (Occur.SHOULD, Occur.MUST):
+                for d, s in hits.items():
+                    scored[d] += s
+        has_req = any(c.occur in (Occur.MUST, Occur.FILTER) for c in q.clauses)
+        need = q.minimum_number_should_match if has_req else max(q.minimum_number_should_match, 1)
+        return {d: scored[d] for d in keep if n_should[d] >= need}
+    raise NotImplementedError(type(q).__name__)
+
+
+def _nonflat_shapes(msm):
+    t = TermQuery
+    dm = lambda *qs, tie: DisjunctionMaxQuery(tuple(qs), tie)
+    return [
+        BooleanQuery.of(
+            BooleanClause(PhraseQuery(("hash", "join")), Occur.MUST),
+            BooleanClause(dm(t("sort"), BoostQuery(t("side"), 2.0), tie=0.3), Occur.SHOULD),
+            BooleanClause(t("the"), Occur.SHOULD),
+            BooleanClause(
+                ConstantScoreQuery(
+                    BooleanQuery.of(*[BooleanClause(t(w)) for w in ("beats", "needs", "is", "avoids")])
+                ),
+                Occur.FILTER,
+            ),
+            BooleanClause(t("same"), Occur.MUST_NOT),
+            min_should_match=msm,
+        ),
+        BooleanQuery.of(
+            BooleanClause(PhraseQuery(("hash", "join")), Occur.MUST),
+            BooleanClause(dm(t("sort"), BoostQuery(t("broadcast"), 2.0), tie=0.5), Occur.SHOULD),
+            BooleanClause(BoostQuery(PhraseQuery(("hash", "hash")), 1.5), Occur.SHOULD),
+            BooleanClause(ConstantScoreQuery(t("join")), Occur.FILTER),
+            BooleanClause(t("table"), Occur.MUST_NOT),
+            min_should_match=msm,
+        ),
+    ]
+
+
+@pytest.mark.parametrize("msm", [0, 1, 2])
+def test_nonflat_boolean_equals_naive(pidx, msm):  # noqa: F811 (the imported fixture)
+    """Phrase MUST, DisMax SHOULD, ConstantScore FILTER and term
+    MUST_NOT clauses combined once by clause key: the scored top-k and
+    the unscored count both match a naive evaluation of the tokens."""
+    s = IndexSearcher(pidx)
+    for q in _nonflat_shapes(msm):
+        expect = _naive_scores(q)
+        got = {r["doc_id"]: r["score"] for r in s.search(q, 20, "exhaustive").collect()}
+        assert set(got) == set(expect), (msm, q)
+        for d, sc in expect.items():
+            assert got[d] == pytest.approx(float(np.float32(sc)), rel=1e-6), (msm, d)
+        assert s.count(q) == len(expect), (msm, q)
